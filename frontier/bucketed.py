@@ -80,9 +80,9 @@ def seen_anti_join_bucketed(
     Physical shape (asserted by test): the seen-table side reads its
     buckets directly — NO exchange on the 10^10-row side; only the
     candidate side shuffles (into the seen table's bucket layout). The
-    Bloom-prefiltered path (frontier.dedup.UrlSeenSet) composes in front
-    of this: bloom-negatives never reach the join at all, and the
-    bloom-positive slice that does is candidate-sized, not store-sized.
+    crawl's seen set (frontier.dedup.UrlSeenSet) is the same exact
+    left-anti join over an unbucketed parquet table; this is its
+    exchange-free layout for a catalog-registered seen table.
     """
     seen = open_bucketed(spark, seen_table).select(url_col)
     return candidates.join(seen, on=url_col, how="left_anti")

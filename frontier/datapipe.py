@@ -8578,15 +8578,15 @@ _register(
 # engine machinery (never a restatement):
 #
 #   round-1 snapshot + persisted UrlSeenSet (record_seen + crash-safe
-#   compact, frontier/dedup.py:350)
+#   compact, frontier/dedup.py UrlSeenSet)
 #     -> snapshot_diff change signal (frontier/pages.py:826 — map-side md5,
 #        bodies never cross an exchange)
 #     -> recrawl channel: changed ∪ changefreq-due unchanged
 #        (recrawl_plan, frontier/schedule.py:90, column-only passthrough)
 #     -> RFC 9110 conditional headers from round-1 validator state
 #        (ETag-over-Last-Modified precedence, as conditional_fetch_plan)
-#     -> discovery channel: the REAL bloom+anti-join seen-set filter (X1)
-#        admitting exactly the URLs round 1 never crawled
+#     -> discovery channel: the crawl's REAL seen-set filter (X1, the
+#        exact anti-join) admitting exactly the URLs round 1 never crawled
 #     -> fetch_plan_budgeted admission (frontier/robots.py:320 — salted
 #        two-level per-host top-k under Crawl-delay-style budgets)
 #     -> simulated fetch outcome (predicted 304s + bytes saved)
@@ -8702,8 +8702,8 @@ def _continuous_crawl_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_bytes",
     )
 
-    # Discovery channel: the REAL persisted seen-set (bloom prefilter +
-    # exact anti-join) — must admit exactly the URLs round 1 never crawled.
+    # Discovery channel: the REAL persisted seen-set (the crawl's exact
+    # anti-join) — must admit exactly the URLs round 1 never crawled.
     discovered = seen.filter_unseen(listing).select(
         "url",
         F.col("lastmod").alias("last_modified"),

@@ -4,14 +4,22 @@ The reference keeps no global visited set (only per-sitemap first-wins dedup
 and ancestor sets); at web scale re-fetching already-seen sitemap/page URLs
 across seeds and crawl rounds dominates cost. Design:
 
-- an exactness-safe two-stage filter: a Bloom filter cheaply rejects
-  definitely-new URLs, and only Bloom-positive candidates are confirmed
-  against the seen-set table with an anti-join — Bloom false positives
-  therefore never drop URLs, so the surviving set equals the reference's
-  semantics exactly;
-- membership and build are fully VECTORIZED (pandas ``hash_array`` double
-  hashing + numpy bit ops over whole Arrow batches — no per-row Python);
-- two physical strategies, auto-selected by bitmap size:
+- the crawl's seen filter (:class:`UrlSeenSet`) is one exact left-anti join
+  of the candidates against the seen table, planned entirely in the JVM.
+  A Bloom prefilter in front of it does not pay here: the confirming
+  anti-join reads the whole seen table whatever the Bloom rejects, so the
+  Bloom only adds a Python pass per application (measured in
+  ``BENCH/seen_filter.json``);
+- the seen table is a compacted parquet/Iceberg table of distinct URLs,
+  appended per crawl round (``record_seen``);
+- the Bloom functions below serve the member and registry paths
+  (``make_member_filter`` for sets too big to broadcast as a join hash
+  table, ``filter_unseen_with_bloom`` for the ``url_seen_filter`` query).
+  Every one of them is exactness-safe: a Bloom has no false negatives, and
+  every positive is confirmed by an exact join. Membership and build are
+  fully VECTORIZED (pandas ``hash_array`` double hashing + numpy bit ops
+  over whole Arrow batches — no per-row Python), in two physical
+  strategies, auto-selected by bitmap size:
   * broadcast: one bitmap built distributed (per-partition partials,
     OR-reduced) and broadcast — right while the bitmap fits comfortably
     in executor memory;
@@ -19,9 +27,7 @@ across seeds and crawl rounds dominates cost. Design:
     independent bitmaps that live in a DataFrame and meet their candidate
     rows through a co-grouped shuffle — NO driver collect, NO broadcast,
     per-task memory = one shard. At 10^10 keys / 3% fpp (~9 GB of bitmap)
-    this is the only feasible layout;
-- the seen table is a compacted parquet/Iceberg table of distinct URLs,
-  appended per crawl round (``record_seen``).
+    this is the only feasible layout.
 """
 
 from __future__ import annotations
@@ -262,11 +268,13 @@ def make_unseen_filter(
     """Build the Bloom side ONCE and return a reusable
     ``candidates → unseen-candidates`` closure.
 
-    A crawl applies the seen filter to every wave's pending frontier;
-    rebuilding the bitmap per wave would re-scan the seen table ≤13 times.
     The broadcast bitmap (or the materialized shard DataFrame) is computed
-    here and reused by every application — the seen table itself is only
-    re-touched by the (small) Bloom-positive anti-join slice."""
+    here and reused by every application; each application still runs the
+    Python probe over its candidates and anti-joins the Bloom positives
+    against the seen table, which reads the whole table. On 4 cores at 10^6
+    and 10^7 seen URLs the plain anti-join was faster per application for
+    all-seen and for 1%-seen candidates (``BENCH/seen_filter.json``), so
+    the crawl's seen set uses it (:class:`UrlSeenSet`)."""
     flag_df = _make_bloom_flagger(
         seen, url_col, expected_urls, fpp, n_shards, salt
     )
@@ -332,7 +340,9 @@ def filter_unseen_with_bloom(
     positives). Result is provably identical to a plain anti-join: Bloom
     negatives are definitely-new (no false negatives), positives are
     confirmed exactly. Only the ~fpp x |candidates| + true-duplicate slice
-    ever touches the seen table.
+    enters the confirming join — but that join still reads the whole seen
+    table, so this form is kept for the ``url_seen_filter`` registry query
+    and for measuring the Bloom, not used by the crawl.
 
     Strategy: with ``n_shards`` (or when the bitmap exceeds
     BROADCAST_BITMAP_BYTES) the sharded co-group path runs — candidates
@@ -340,15 +350,19 @@ def filter_unseen_with_bloom(
     bitmap ever reaches the driver or a broadcast. Otherwise one bitmap is
     built and broadcast, and candidates stay in place.
 
-    One-shot form of :func:`make_unseen_filter` (which a wave loop uses to
-    build the Bloom side once and apply it per wave)."""
+    One-shot form of :func:`make_unseen_filter`."""
     return make_unseen_filter(
         seen, url_col, expected_urls, fpp, n_shards, salt
     )(candidates)
 
 
 class UrlSeenSet:
-    """Persistent URL-seen set with Bloom prefilter + exact anti-join."""
+    """Persistent URL-seen set: a parquet table of distinct URLs, filtered
+    against with one exact left-anti join.
+
+    ``expected_urls`` and ``fpp`` size a Bloom over this table for callers
+    that build one (:func:`build_bloom`, :func:`make_member_filter`); the
+    seen filter itself is the plain anti-join and does not use them."""
 
     def __init__(
         self,
@@ -371,38 +385,26 @@ class UrlSeenSet:
             return None  # no rounds recorded yet
 
     def filter_unseen(self, candidates: DataFrame, url_col: str = "url") -> DataFrame:
-        """Rows of ``candidates`` whose URL is NOT in the seen set.
-
-        Bloom-negative rows pass through without touching the seen table;
-        only the (small) Bloom-positive slice pays the anti-join — at cluster
-        scale that slice is ~fpp x |candidates| + true duplicates, shuffled
-        against a bucketed seen table.
-        """
-        seen = self._seen_table()
-        if seen is None:
-            return candidates
-        return filter_unseen_with_bloom(
-            candidates,
-            seen.select(F.col("url").alias(url_col)),
-            url_col,
-            self.expected_urls,
-            self.fpp,
-        )
+        """Rows of ``candidates`` whose URL is NOT in the seen set (one-shot
+        form of :meth:`prepare_filter`)."""
+        return self.prepare_filter(url_col)(candidates)
 
     def prepare_filter(self, url_col: str = "url"):
         """Reusable ``candidates → unseen`` closure over the CURRENT seen
-        table, with the Bloom side built exactly once
-        (:func:`make_unseen_filter`) — what a wave loop applies to every
-        pending frontier. Identity while no rounds are recorded yet."""
+        table: an exact left-anti join, planned entirely in the JVM (no
+        Python pass). The table's file listing is fixed here, so rounds
+        recorded later do not change what the closure filters. Identity
+        while no rounds are recorded yet.
+
+        The join reads the whole seen table on every application, so a
+        caller that applies the closure to one frontier several times (a
+        wave loop: bucket list, parse, miss detection) should materialize
+        its result once."""
         seen = self._seen_table()
         if seen is None:
             return lambda candidates: candidates
-        return make_unseen_filter(
-            seen.select(F.col("url").alias(url_col)),
-            url_col,
-            self.expected_urls,
-            self.fpp,
-        )
+        seen_urls = seen.select(F.col("url").alias(url_col))
+        return lambda candidates: candidates.join(seen_urls, url_col, "left_anti")
 
     def record_seen(self, urls: DataFrame, url_col: str = "url") -> None:
         """Append this round's URLs (compacted to distinct) to the table."""

@@ -769,9 +769,9 @@ def expand_frontier(
     the kernel pass.  The visited set is ``localCheckpoint``-ed per round:
     the growing union otherwise doubles the logical plan every hop (on a
     cluster prefer ``setCheckpointDir`` + ``.checkpoint()``).  Early-exits
-    when a hop discovers nothing.  At 10¹⁰ URLs, swap the plain anti-join
-    for :class:`frontier.dedup.UrlSeenSet`'s Bloom-prefiltered one and key
-    edges on 64-bit hashes; rounds stay O(max_depth).
+    when a hop discovers nothing.  At 10¹⁰ URLs, keep the visited set in a
+    :class:`frontier.dedup.UrlSeenSet` table and key edges on 64-bit
+    hashes; rounds stay O(max_depth).
 
     Returns ``(url, depth)`` — BFS first-visit depth is the minimum depth.
     """

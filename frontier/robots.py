@@ -516,7 +516,14 @@ def crawl_fetch_plan(
     seeds = forest.nodes.filter(F.col("level") == -1).select(
         F.col("url").alias("seed")
     )
-    rules = robots_rules_from_store(seeds, fetches, user_agent)
+    # one row per host, read by both the filter and the budgets: built once
+    # (store join, per-host window, Python rules kernel) instead of per
+    # consumer
+    rules = robots_rules_from_store(seeds, fetches, user_agent).localCheckpoint(
+        eager=True
+    )
+    # the plan reads only the page sink and the rules from here on
+    forest.unpersist(delete_pages=False)
     pages = robots_filter(
         forest.all_pages(),
         rules,

@@ -133,12 +133,3 @@ def recrawl_plan(
         F.col(priority_col),
         *[F.col(c) for c in extra_cols],
     )
-
-
-def host_budgets_report(plan: DataFrame) -> DataFrame:
-    """Telemetry: per-host planned fetches + priority stats."""
-    return plan.groupBy("canonical_host").agg(
-        F.count("*").alias("n_planned"),
-        F.max("priority").alias("max_priority"),
-        F.min("fetch_rank").alias("first_rank"),
-    )

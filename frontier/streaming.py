@@ -746,9 +746,8 @@ def reconcile_first_seen(
 
     — URLs the window actually contained, that the stream never emitted,
     and that the compacted :class:`frontier.dedup.UrlSeenSet` doesn't
-    already know (the ``seen_set.filter_unseen`` leg is itself the bloom-
-    prefiltered exact anti-join, so reconciliation inherits batch
-    exactness). Run it at compaction cadence: the emitted stream plus the
+    already know (the ``seen_set.filter_unseen`` leg is the batch crawl's
+    exact anti-join, so reconciliation inherits batch exactness). Run it at compaction cadence: the emitted stream plus the
     repair rows equals the batch-only first-seen set EXACTLY (pinned by
     test with a deliberately saturated bloom), after which
     ``seen_set.record_seen(emitted ∪ repairs)`` makes the next window's
@@ -756,7 +755,7 @@ def reconcile_first_seen(
 
     Scale shape: one distinct on (url) over the window's observed rows,
     one anti-join against the (much smaller) emitted set, then the
-    seen-set's bloom-prefiltered anti-join — all equality joins on the
+    seen-set's anti-join — all equality joins on the
     url key, no bodies, the same shuffle the batch crawl already pays at
     compaction. ``observed`` is the landing data the stream itself read,
     so no second fetch happens."""

@@ -54,30 +54,6 @@ def gzipped(text: str) -> bytes:
     return _gzip.compress(text.encode("utf-8"), mtime=0)
 
 
-def _urlset_news(urls_titles: list[tuple[str, str]]) -> str:
-    entries = "\n".join(
-        f"""  <url>
-    <loc>{u}</loc>
-    <news:news>
-      <news:publication>
-        <news:name>{TEST_PUBLICATION_NAME}</news:name>
-        <news:language>{TEST_PUBLICATION_LANGUAGE}</news:language>
-      </news:publication>
-      <news:publication_date>{TEST_DATE_ISO}</news:publication_date>
-      <news:title>{t}</news:title>
-    </news:news>
-  </url>"""
-        for u, t in urls_titles
-    )
-    return (
-        '<?xml version="1.0" encoding="UTF-8"?>\n'
-        '<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9"\n'
-        '        xmlns:news="http://www.google.com/schemas/sitemap-news/0.9"\n'
-        '        xmlns:xhtml="http://www.w3.org/1999/xhtml">\n'
-        f"{entries}\n</urlset>"
-    )
-
-
 def reference_site_rows(base: str = TEST_BASE_URL) -> list[dict]:
     """The canonical golden mini-site (tests/tree/base.py:41-255): robots.txt
     with both directive spellings, a static-pages urlset exercising invalid

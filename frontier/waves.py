@@ -26,7 +26,7 @@ Scale notes (100 TB fetch store, 10^10-URL frontier):
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Callable, Iterable, Sequence
 
 import pandas as pd
@@ -38,7 +38,6 @@ from . import parse as K
 from .schemas import (
     PAGES_FLAT_SCHEMA,
     PARSE_OUT_SCHEMA,
-    PENDING_SCHEMA,
     path_segment,
 )
 from .textnorm import is_http_url, strip_url_to_homepage
@@ -131,6 +130,18 @@ class _arrow_byte_batches:
             self.spark.conf.set(self._key, self._prev)
 
 
+def _free(df: DataFrame) -> None:
+    """Drop a persisted or locally checkpointed frame's blocks now.
+
+    ``DataFrame.unpersist`` frees a persist, but a ``localCheckpoint``'s
+    blocks belong to the RDD under its plan's ``LogicalRDD`` leaf, which
+    Spark otherwise frees only once the JVM garbage-collects that RDD."""
+    df.unpersist(blocking=False)
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def _tz_aware(naive, offset_seconds):
     """Rebuild the reference's offset-preserving datetime from the engine's
     (UTC-naive instant, source offset) column pair — see schemas.py."""
@@ -174,6 +185,9 @@ class SitemapForest:
     #: checkpoint_dir (then it lives under it and survives for resume)
     pages_dir: str | None = None
     _owns_pages_dir: bool = False
+    #: frames the wave loop materialized (persisted frontiers, parse
+    #: snapshots); the forest's DataFrames read them until unpersist()
+    _wave_frames: list[DataFrame] = field(default_factory=list)
 
     def all_sitemaps(self) -> DataFrame:
         """Pre-order traversal (usp sitemap.py:405-413), roots excluded per
@@ -187,11 +201,15 @@ class SitemapForest:
         return self.pages.orderBy("seed", "path_key", "seq")
 
     def unpersist(self, delete_pages: bool = True) -> None:
-        """Release the forest's resources: the cached nodes table, and (for
-        forests that own a temp page dir) the page parquet files. After this
-        the ``pages`` DataFrame is dead; long-lived sessions running many
+        """Release the forest's resources: the cached nodes table, the wave
+        loop's persisted frontiers and parse snapshots, and (for forests
+        that own a temp page dir) the page parquet files. After this the
+        ``pages`` DataFrame is dead; long-lived sessions running many
         crawls should call this when done with a forest."""
         self.nodes.unpersist(blocking=False)
+        for frame in self._wave_frames:
+            _free(frame)
+        self._wave_frames = []
         if delete_pages and self._owns_pages_dir and self.pages_dir:
             import shutil
 
@@ -269,10 +287,6 @@ class SitemapForest:
         DataFrame ``(seed, json)``. Datetimes render as ISO-8601 with the
         source UTC offset restored (naive when the source had no zone)."""
         return _to_json_tree(self, with_pages)
-
-
-def _empty_pending(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], PENDING_SCHEMA)
 
 
 #: Partition column of a suffix-clustered fetch store (cluster_fetch_store).
@@ -561,10 +575,12 @@ class _WaveRunner:
         self.store_urls_unique = store_urls_unique
         self.pages_dir = pages_dir
         #: R8 cross-crawl URL-seen filter (UrlSeenSet.prepare_filter):
-        #: applied to EVERY wave's pending frontier, so already-seen sitemap
-        #: URLs are never re-fetched across seeds/crawl rounds (north rule)
+        #: applied in EVERY frontier close, so already-seen sitemap URLs are
+        #: never re-fetched across seeds/crawl rounds (north rule)
         self.seen_filter = seen_filter
         self.wave_outputs: list[DataFrame] = []
+        #: frames this runner materialized; the forest frees them
+        self.wave_frames: list[DataFrame] = []
 
     def _wave_committed(self, wave: int) -> bool:
         """True iff this wave's snapshot is committed and may be reused
@@ -608,11 +624,36 @@ class _WaveRunner:
         # throttling the parse stage to a fraction of the cores whenever
         # small_cap < parallelism (measured as the round-5 lazy-variant
         # trap at local[32]). The parse job must run at its own width.
-        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        snapshot = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        self.wave_frames.append(snapshot)
+        return snapshot
 
     def run(self, pending: DataFrame) -> None:
         with _arrow_byte_batches(self.spark):
             self._run(pending)
+
+    def _close(self, pending: DataFrame) -> tuple[DataFrame, list[int], int]:
+        """Close a frontier in ONE action: drop already-seen URLs, persist
+        the survivors and compute their bucket histogram.
+
+        The histogram is the emptiness check, the size that sets the next
+        parse width and the next scan's bucket-pruning list, all exact for
+        the filtered frontier. Every consumer of the frontier (fetch join,
+        miss nodes at assembly) reads the persisted result, so the seen
+        filter runs once per wave. Lineage stays bounded: the frontier is
+        one narrow hop off the previous wave's parse snapshot (or the seed
+        frame)."""
+        if self.seen_filter is not None:
+            # skipped URLs simply don't appear in this crawl's forest
+            pending = self.seen_filter(pending)
+        pending = pending.persist(StorageLevel.DISK_ONLY)
+        self.wave_frames.append(pending)
+        rows = (
+            pending.groupBy(fetch_bucket(F.col("url")).alias("b"))
+            .count()
+            .collect()
+        )
+        return pending, [r["b"] for r in rows], sum(r["count"] for r in rows)
 
     def _run(self, pending: DataFrame) -> None:
         import sys
@@ -623,26 +664,23 @@ class _WaveRunner:
         # small-side partition cap: pending/node/child rows are tiny and feed
         # broadcasts + driver checks; scanning them over the parse stage's
         # wide partitioning would cost a task launch (~10 ms) per near-empty
-        # partition, several times per wave
+        # partition, in every consumer of the frontier
         small_cap = max(8, self.spark.sparkContext.defaultParallelism // 4)
         # assembly keeps enough width for downstream sorts/writes to use
         # every core on their map side
         assembly_cap = max(small_cap, self.spark.sparkContext.defaultParallelism // 2)
-        bucketed = FETCH_BUCKET_COL in self.fetches.columns
-        buckets_hint: list[int] | None = None  # wave 0 derives its own
-        pending_rows: int | None = None  # wave 0's frontier size unknown
+        t0 = time.perf_counter()
+        # the seed frontier goes through the same close as every later one
+        pending, buckets, pending_rows = self._close(pending)
+        if not pending_rows:
+            # nothing to fetch (e.g. every seed URL already seen): wave 0
+            # still counts, but runs no scan, parse or close
+            self._record(wave, t0, t0, time.perf_counter())
+            return
         while True:
-            t0 = time.perf_counter()
-            if self.seen_filter is not None:
-                # R8: drop already-seen URLs from the frontier before the
-                # fetch join — the Bloom side was built once per crawl;
-                # skipped URLs simply don't appear in this crawl's forest
-                pending = self.seen_filter(pending)
             fetchable = pending.filter("blocked_reason IS NULL")
             blocked = pending.filter("blocked_reason IS NOT NULL")
-            joined = self._fetch_join(
-                fetchable, blocked, buckets_hint, pending_rows
-            )
+            joined = self._fetch_join(fetchable, blocked, buckets, pending_rows)
             skip = self._wave_committed(wave)
             pages_dir = self._pages_wave_dir(wave)
             if pages_dir is not None and not skip:
@@ -669,9 +707,9 @@ class _WaveRunner:
             # of a second store scan — at a 100 TB store the extra
             # broadcast-subquery scan per wave was the single biggest fixed
             # cost. NOT checkpointed (round-4 verdict #3): both inputs
-            # (parse snapshot, pending frontier) are already cached with
-            # truncated lineage, so the assembly-time recompute is a tiny
-            # broadcast anti-join — while the per-wave localCheckpoint
+            # (parse snapshot, persisted frontier) are already materialized
+            # with truncated lineage, so the assembly-time recompute is a
+            # tiny broadcast anti-join — while the per-wave localCheckpoint
             # call cost ~0.13 s of driver-side physical planning per wave.
             miss_nodes = self._miss_nodes(fetchable, parsed)
             # assembly reads the (already-materialized) snapshot through a
@@ -691,11 +729,6 @@ class _WaveRunner:
                 # a DataFrame-level filter applied between parse and expansion
                 children = self.recurse_filter(children)
 
-            # narrow-coalesce + eager checkpoint: ONE pass over the parse
-            # snapshot yields next wave's pending, cached small — the
-            # emptiness check and both broadcast builds of the next
-            # iteration then read a handful of cached partitions instead of
-            # re-scanning the wide snapshot three times
             pending = children.selectExpr(
                 "seed",
                 "child_url AS url",
@@ -709,56 +742,32 @@ class _WaveRunner:
                 "blocked_reason",
             ).coalesce(small_cap)
             t_plan = time.perf_counter()
-            if bucketed and not os.environ.get("FRONTIER_WAVE_LEGACY"):
-                # ONE job closes the wave: persist the next frontier and
-                # compute its bucket histogram in the same action — the
-                # histogram doubles as the emptiness check AND the next
-                # wave's scan-pruning bucket list, replacing the eager
-                # checkpoint job + isEmpty job + next wave's
-                # distinct-bucket collect. Lineage stays bounded: pending
-                # is one narrow hop off the wave's parse snapshot.
-                pending = pending.persist(StorageLevel.DISK_ONLY)
-                rows = (
-                    pending.groupBy(fetch_bucket(F.col("url")).alias("b"))
-                    .count()
-                    .collect()
-                )
-                buckets_hint = [r["b"] for r in rows]
-                pending_rows = sum(r["count"] for r in rows)
-                empty = not rows
-            else:
-                pending = pending.localCheckpoint(eager=True)
+            pending, buckets, pending_rows = self._close(pending)
             t_pending = time.perf_counter()
             if trace:
                 print(
-                    f"[wave {self.phase}/{wave}] expand+checkpoint "
-                    f"{time.perf_counter() - t0:.2f}s total",
+                    f"[wave {self.phase}/{wave}] expand+close "
+                    f"{t_pending - t0:.2f}s total",
                     file=sys.stderr,
                 )
-            # the fused close above (persist + histogram) already decided
-            # emptiness and the next bucket list; the legacy/unbucketed
-            # path still pays a separate isEmpty job. The histogram is
-            # computed before the next wave's seen filter runs, so it is
-            # a superset of the post-filter buckets — pruning with a
-            # superset is always safe.
-            if not (bucketed and not os.environ.get("FRONTIER_WAVE_LEGACY")):
-                buckets_hint = None
-                empty = pending.isEmpty()
-            LAST_WAVE_TIMINGS.append(
-                {
-                    "phase": self.phase,
-                    "wave": wave,
-                    "seconds": round(time.perf_counter() - t0, 3),
-                    "plan_s": round(t_plan - t0, 3),
-                    "pending_job_s": round(t_pending - t_plan, 3),
-                    "close_s": round(time.perf_counter() - t_pending, 3),
-                }
-            )
-            if empty:
+            self._record(wave, t0, t_plan, t_pending)
+            if not pending_rows:
                 break
             wave += 1
             if wave > K.MAX_RECURSION_LEVEL + 1:  # safety net; R1 blocks first
                 break
+            t0 = time.perf_counter()
+
+    def _record(self, wave: int, t0: float, t_plan: float, t_end: float) -> None:
+        LAST_WAVE_TIMINGS.append(
+            {
+                "phase": self.phase,
+                "wave": wave,
+                "seconds": round(t_end - t0, 3),
+                "plan_s": round(t_plan - t0, 3),
+                "pending_job_s": round(t_end - t_plan, 3),
+            }
+        )
 
     def _miss_nodes(self, fetchable: DataFrame, parsed: DataFrame) -> DataFrame:
         """Invalid-node rows for pending URLs absent from the fetch store —
@@ -796,8 +805,8 @@ class _WaveRunner:
         self,
         fetchable: DataFrame,
         blocked: DataFrame,
-        buckets_hint: list[int] | None = None,
-        pending_rows: int | None = None,
+        buckets: list[int],
+        pending_rows: int,
     ) -> DataFrame:
         """(pending ⨝ fetch store) without ever moving payload bodies.
 
@@ -819,22 +828,10 @@ class _WaveRunner:
             # wave's URLs hash into (directory-level partition pruning — the
             # scan never opens unrelated buckets' files, so a homogeneous
             # wave like the robots probe reads ~1/64 of the store's payload
-            # bytes). Waves ≥1 receive the bucket list precomputed by the
-            # previous wave's closing histogram action (buckets_hint);
-            # wave 0 pays one tiny driver collect over the seed frame.
-            if buckets_hint is not None:
-                wave_buckets = buckets_hint
-            else:
-                wave_buckets = [
-                    r[0]
-                    for r in fetchable.select(
-                        fetch_bucket(F.col("url")).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                ]
+            # bytes). The bucket list comes from the frontier close's
+            # histogram (_close), exact for the filtered frontier.
             store = store.filter(
-                F.col(FETCH_BUCKET_COL).isin(wave_buckets)
+                F.col(FETCH_BUCKET_COL).isin(buckets)
             ).drop(FETCH_BUCKET_COL)
         if self.store_urls_unique:
             # one broadcast, one join: scan → hash-probe pending → parse
@@ -872,17 +869,14 @@ class _WaveRunner:
         # this wave's count — unchecked, partitions double every wave and the
         # parse stage degenerates into thousands of empty Python-worker
         # launches. Cap with a narrow coalesce (no body shuffle). When the
-        # previous wave's closing histogram told us the frontier is SMALL,
-        # shrink the parse width to ~256 URLs/task: a near-empty wave run
-        # at full width pays a task launch + Arrow/Python round trip per
-        # empty slice, which dominates deep crawls' per-wave fixed cost.
+        # frontier close's histogram says the frontier is SMALL, shrink the
+        # parse width to ~256 URLs/task: a near-empty wave run at full
+        # width pays a task launch + Arrow/Python round trip per empty
+        # slice, which dominates deep crawls' per-wave fixed cost. Floor at
+        # one task per core: URL count under-estimates work for page-heavy
+        # leaves, so small-but-fat waves keep a full complement of tasks.
         par = self.spark.sparkContext.defaultParallelism
-        cap = 2 * par
-        if pending_rows is not None:
-            # floor at one task per core: URL count under-estimates work
-            # for page-heavy leaves, so small-but-fat waves keep a full
-            # complement of parse tasks
-            cap = min(cap, max(par, (pending_rows + 255) // 256))
+        cap = min(2 * par, max(par, (pending_rows + 255) // 256))
         return wave_input.coalesce(max(1, cap))
 
 
@@ -998,10 +992,12 @@ def sitemap_tree_for_homepages(
     output is deterministic under parallelism.
 
     ``seen_set`` (a :class:`frontier.dedup.UrlSeenSet`) is the R8
-    cross-crawl URL-seen set: every wave's pending frontier is filtered
-    through it (Bloom built once per crawl, positives anti-join-confirmed —
-    exactness-safe), so sitemap URLs fetched by an earlier crawl round are
-    never re-fetched; they simply don't appear in this crawl's forest.
+    cross-crawl URL-seen set: every frontier, the seed frontier included,
+    is filtered through it by one exact anti-join when the frontier is
+    closed (``seen_set.prepare_filter`` is the only call the waves make),
+    and the filtered frontier is persisted once for all its consumers, so
+    sitemap URLs fetched by an earlier crawl round are never re-fetched;
+    they simply don't appear in this crawl's forest.
     ``record_seen=True`` appends every sitemap URL this crawl attempted
     (all non-root nodes, 404/invalid included) to the seen table afterwards
     — call ``seen_set.compact()`` periodically between rounds.
@@ -1053,7 +1049,7 @@ def sitemap_tree_for_homepages(
         pages_root = tempfile.mkdtemp(prefix="frontier-pages-")
         owns_pages = True
 
-    # R8: one Bloom build serves every wave of both phases of this crawl
+    # R8: one seen-table snapshot serves every wave of both phases
     seen_filter = seen_set.prepare_filter("url") if seen_set is not None else None
 
     runner_a = _WaveRunner(
@@ -1146,6 +1142,7 @@ def sitemap_tree_for_homepages(
         fetches.unpersist(blocking=False)
 
     forest = _assemble(spark, seeds, everything, pages_root, owns_pages)
+    forest._wave_frames = runner_a.wave_frames + runner_b.wave_frames
     # per-wave fetch/parse telemetry (north rule: per-partition lineage +
     # metrics ride on every snapshot; this is the per-wave rollup)
     forest.wave_metrics = everything.groupBy("phase", "wave").agg(

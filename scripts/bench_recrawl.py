@@ -2,8 +2,8 @@
 set at scale.
 
 Round 1 crawls a corpus cold and records every attempted sitemap URL;
-round 2 re-crawls the SAME seeds with the seen set active — every wave's
-frontier is Bloom-filtered (built once) and anti-join-confirmed, so the
+round 2 re-crawls the SAME seeds with the seen set active — every
+frontier is anti-joined against the seen table once, in its close, so the
 engine schedules nothing and touches no payload bytes. The ratio is the
 cost of discovering "nothing new to do" at 10^10 scale.
 

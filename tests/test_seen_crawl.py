@@ -6,8 +6,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from frontier.dedup import UrlSeenSet, make_unseen_filter
-from frontier.synth import synth_crawl_corpus
-from frontier.waves import sitemap_tree_for_homepages
+from frontier.synth import reference_site_fetches, synth_crawl_corpus
+from frontier.waves import LAST_WAVE_TIMINGS, sitemap_tree_for_homepages
+
+#: physical operators that run Python workers
+_PYTHON_NODES = (
+    "MapInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
 
 
 def _crawl(spark, corpus, n_hosts, **kw):
@@ -37,6 +47,27 @@ def test_make_unseen_filter_reusable(spark):
         assert got == expect
 
 
+def test_seen_filter_is_one_jvm_anti_join(spark, tmp_path):
+    """The crawl's seen filter plans as a plain left-anti join: no Python
+    worker node anywhere in its physical plan, and its result is exact."""
+    seen = UrlSeenSet(spark, str(tmp_path / "seen"), expected_urls=256, fpp=0.1)
+    seen.record_seen(
+        spark.createDataFrame(
+            [(f"http://s.com/p{i}",) for i in range(0, 100, 2)], "url string"
+        )
+    )
+    candidates = spark.createDataFrame(
+        [(f"http://s.com/p{i}",) for i in range(100)], "url string"
+    )
+    unseen = seen.prepare_filter("url")(candidates)
+    plan = unseen._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan
+    assert [n for n in _PYTHON_NODES if n in plan] == []
+    assert sorted(r["url"] for r in unseen.collect()) == sorted(
+        f"http://s.com/p{i}" for i in range(1, 100, 2)
+    )
+
+
 def test_second_crawl_skips_everything(spark, tmp_path):
     corpus = synth_crawl_corpus(spark, 2, leaves_per_host=2, pages_per_leaf=5)
     seen = UrlSeenSet(spark, str(tmp_path / "seen"), expected_urls=4096)
@@ -47,6 +78,9 @@ def test_second_crawl_skips_everything(spark, tmp_path):
     assert n_recorded == 2 * 4  # robots + index + 2 leaves per host
 
     second = _crawl(spark, corpus, 2, seen_set=seen)
+    # the seen filter emptied the seed frontier: the robots wave still
+    # counts, and nothing follows it
+    assert len(LAST_WAVE_TIMINGS) == 1
     # every sitemap URL is seen → only synthetic roots remain, no pages
     assert second.pages.count() == 0
     assert second.nodes.filter(F.col("level") >= 0).count() == 0
@@ -140,3 +174,33 @@ def test_compact_crash_recovery(spark, tmp_path):
     leftovers = [e for e in os.listdir(str(tmp_path))
                  if "__trash-" in e or "__compact-" in e]
     assert leftovers == []
+
+
+def test_forest_unpersist_frees_every_persisted_rdd(spark, tmp_path):
+    """A long-lived session running many crawls frees what each crawl
+    persisted (frontiers, parse snapshots, the nodes cache) on
+    forest.unpersist(): no persisted RDD outlives its forest."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    baseline = persisted()
+    corpus = synth_crawl_corpus(spark, 2, leaves_per_host=2, pages_per_leaf=5)
+    seen = UrlSeenSet(spark, str(tmp_path / "seen"), expected_urls=4096)
+    crawls = [
+        lambda: _crawl(spark, corpus, 2),
+        lambda: _crawl(spark, corpus, 2, seen_set=seen, record_seen=True),
+        # both phases: robots waves, then the known-path probes
+        lambda: sitemap_tree_for_homepages(
+            spark,
+            ["http://test_ultimate-sitemap-parser.com"],
+            reference_site_fetches(spark),
+        ),
+    ]
+    for crawl in crawls:
+        forest = crawl()
+        assert forest.nodes.count() > 0  # materializes the nodes cache
+        assert persisted() - baseline  # the crawl did persist something
+        forest.unpersist()
+        assert persisted() - baseline == set()

@@ -12,9 +12,11 @@ from frontier.synth import (
     _row,
     fetches_from_rows,
     reference_site_fetches,
+    reference_site_rows,
 )
 from frontier.waves import (
     FETCH_BUCKET_COL,
+    KNOWN_SITEMAP_PATHS,
     cluster_fetch_store,
     fetch_bucket,
     prepare_fetches,
@@ -127,3 +129,58 @@ def test_partition_pruning_reads_fewer_files(spark, tmp_path):
     assert any(r.url == f"{BASE}/robots.txt" for r in got)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
+
+
+def test_waves_never_open_untouched_buckets(spark, tmp_path):
+    """Bucket pruning pinned end to end: every bucket directory that no
+    wave's frontier hashes into holds unreadable files, and the crawl must
+    still reproduce the unclustered forest exactly — so no wave, wave 0
+    included, may scan a bucket outside its frontier's histogram."""
+    plain = _crawl(spark, reference_site_fetches(spark))
+    # everything a wave can request: robots, every known path (404s leave
+    # no node behind), every node of the golden forest
+    requested = {f"{BASE}/robots.txt"} | {
+        f"{BASE}/{p}" for p in KNOWN_SITEMAP_PATHS
+    }
+    for r in plain.nodes.select("url", "requested_url").collect():
+        requested |= {r.url, r.requested_url}
+    touched = {
+        r.b
+        for r in spark.createDataFrame(
+            [(u,) for u in requested if u], "url string"
+        )
+        .select(fetch_bucket(F.col("url")).alias("b"))
+        .collect()
+    }
+    # unlinked decoys fill buckets that no wave will ever touch
+    decoys = [_row(f"{BASE}/unlinked_{i}.xml", "<urlset/>") for i in range(40)]
+    path = str(tmp_path / "store")
+    store = cluster_fetch_store(
+        fetches_from_rows(spark, reference_site_rows() + decoys), path
+    )
+    fetches = prepare_fetches(store)  # its redirect probe scans everything
+    corrupted = 0
+    for entry in os.listdir(path):
+        if not entry.startswith(f"{FETCH_BUCKET_COL}="):
+            continue
+        if int(entry.split("=", 1)[1]) in touched:
+            continue
+        bucket_dir = os.path.join(path, entry)
+        for name in os.listdir(bucket_dir):
+            full = os.path.join(bucket_dir, name)
+            if name.endswith(".crc"):
+                os.remove(full)
+            else:
+                with open(full, "wb") as fh:
+                    fh.write(b"not a parquet file")
+                corrupted += 1
+    assert corrupted > 0
+    with pytest.raises(Exception):  # the store really is unreadable whole
+        fetches.select("url", "body").collect()
+
+    clustered = _crawl(spark, fetches, fetches_prepared=True)
+    assert _node_rows(clustered) == _node_rows(plain)
+    assert _page_rows(clustered) == _page_rows(plain)
+    plain.unpersist()
+    clustered.unpersist()
+

@@ -83,14 +83,16 @@ def test_unique_store_wave_join_has_no_body_exchange(spark, tmp_path):
     unique_runner = _WaveRunner(
         spark, prepared, None, None, "t", store_urls_unique=True
     )
-    plan = physical(unique_runner._fetch_join(pend, empty))
+    # the frontier close supplies the wave's bucket list and size
+    pend, buckets, rows = unique_runner._close(pend)
+    plan = physical(unique_runner._fetch_join(pend, empty, buckets, rows))
     assert "Exchange hashpartitioning" not in plan
     assert "BroadcastHashJoin" in plan
 
     unknown_runner = _WaveRunner(
         spark, prepared, None, None, "t", store_urls_unique=False
     )
-    plan2 = physical(unknown_runner._fetch_join(pend, empty))
+    plan2 = physical(unknown_runner._fetch_join(pend, empty, buckets, rows))
     # the per-wave max_by dedup exchange, carrying body — exactly what the
     # unique-store plan must not pay
     assert "Exchange hashpartitioning" in plan2 and "body" in plan2
