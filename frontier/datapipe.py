@@ -1395,12 +1395,11 @@ _register(
     ),
 )
 
-# R8: URL-seen set exactness — the Bloom-prefiltered, anti-join-confirmed
-# filter (frontier/dedup.py) must produce EXACTLY the plain anti-join result
-# (false positives confirmed away, no false negatives by construction). The
-# Spark side runs the real two-stage filter; the oracle is the plain
-# anti-join — a value-hash match here is a proof of exactness-safety on this
-# input (north rule: "final URL-seen set must match the reference's").
+# R8: URL-seen set exactness — the crawl's seen filter
+# (frontier/dedup.py UrlSeenSet) is one left-anti join of the candidates
+# against the seen URLs, planned entirely in the JVM; the oracle is the
+# plain NOT IN (north rule: "final URL-seen set must match the
+# reference's").
 _SEEN_CAND_SQL = """
 SELECT DISTINCT 'http://s' || CAST(event_id % 60 AS {STR}) || '.com/p'
        || CAST(event_id % 250 AS {STR}) AS url
@@ -1414,16 +1413,10 @@ FROM documents
 
 
 def _url_seen_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import filter_unseen_with_bloom
-
     _load(spark, sf_dir, "events", "documents")
     candidates = spark.sql(_SEEN_CAND_SQL.replace("{STR}", "STRING"))
     seen = spark.sql(_SEEN_SEEN_SQL.replace("{STR}", "STRING"))
-    # tight bloom (small expected set) so false positives actually occur at
-    # this scale and the anti-join confirmation path is genuinely exercised
-    return filter_unseen_with_bloom(
-        candidates, seen, expected_urls=4096, fpp=0.2
-    ).orderBy("url")
+    return candidates.join(seen, "url", "left_anti").orderBy("url")
 
 
 _register(
@@ -1437,7 +1430,7 @@ _register(
             + _SEEN_SEEN_SQL.replace("{STR}", "VARCHAR")
             + ") s) ORDER BY url"
         ),
-        doc="R8 Bloom+anti-join URL-seen filter vs plain anti-join oracle",
+        doc="R8 URL-seen filter (exact left-anti join) vs NOT IN oracle",
     ),
 )
 
@@ -4010,7 +4003,6 @@ _register(
 # |hosts| rows; fixed-width microsecond strings for the engine-portable
 # timestamp arithmetic (the sessionize idiom).
 _ROBOTS_TTL_H = 24
-_ROBOTS_ASOF = "2025-06-01 00:00:00"
 
 _ROBOTS_REFRESH_SQL = """
 WITH hosts AS (
@@ -6819,7 +6811,7 @@ _register(
 # shuffling — and only the positive slice (~fpp of the stream + true hits)
 # meets the eval-gram table in an exact semi-join. No false negatives by
 # Bloom construction, so the oracle is the EXACT decontam SQL: the driver
-# gate green is the exactness proof (same pattern as url_seen_filter).
+# gate green is the exactness proof.
 def _decontam_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -7212,9 +7204,6 @@ _register(
 # in the raw-HLL band, and the zero_registers column is emitted so a caller
 # can route to LC. Estimator quality (not just cross-engine equality) is
 # pinned by tests/test_sketches.py against exact COUNT(DISTINCT).
-_HLL_TWO48 = 1 << 48
-_HLL_TWO49 = 1 << 49
-
 _HLL_SQL = """
 WITH urls AS (
     SELECT source AS host,

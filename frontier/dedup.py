@@ -12,11 +12,11 @@ across seeds and crawl rounds dominates cost. Design:
   ``BENCH/seen_filter.json``);
 - the seen table is a compacted parquet/Iceberg table of distinct URLs,
   appended per crawl round (``record_seen``);
-- the Bloom functions below serve the member and registry paths
-  (``make_member_filter`` for sets too big to broadcast as a join hash
-  table, ``filter_unseen_with_bloom`` for the ``url_seen_filter`` query).
-  Every one of them is exactness-safe: a Bloom has no false negatives, and
-  every positive is confirmed by an exact join. Membership and build are
+- the Bloom functions below serve the member path: ``make_member_filter``
+  keeps the candidates whose key IS in a set too big to broadcast as a
+  join hash table (``decontam_bloom``, the streaming blocklist gate). It is
+  exactness-safe: a Bloom has no false negatives, and every positive is
+  confirmed by an exact semi-join. Membership and build are
   fully VECTORIZED (pandas ``hash_array`` double hashing + numpy bit ops
   over whole Arrow batches — no per-row Python), in two physical
   strategies, auto-selected by bitmap size:
@@ -175,122 +175,6 @@ def build_bloom_shards(
     )
 
 
-def _make_bloom_flagger(
-    seen: DataFrame,
-    url_col: str,
-    expected_urls: int,
-    fpp: float,
-    n_shards: int | None,
-    salt: bytes,
-):
-    """Shared core of make_unseen_filter / make_member_filter: build the
-    Bloom side once and return a ``candidates → candidates + _maybe_seen``
-    flagging closure (broadcast bitmap, or sharded co-group above the
-    broadcast budget). ``_maybe_seen`` has no false negatives — a key
-    present in ``seen`` always flags True — so either exact confirmation
-    direction (anti-join the positives, or semi-join them) stays exact."""
-    m_bits, k = _bloom_params(expected_urls, fpp)
-    if n_shards is None and m_bits // 8 > BROADCAST_BITMAP_BYTES:
-        n_shards = max(1, math.ceil((m_bits // 8) / SHARD_BITMAP_BYTES))
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    if n_shards is not None:
-        # cache the shard bitmaps: built once on first application, reused
-        # by every later one. persist (not localCheckpoint) keeps lineage,
-        # so a lost executor recomputes its shards instead of failing the
-        # query, and a one-shot caller pays nothing until consumption.
-        from pyspark import StorageLevel
-
-        shards = build_bloom_shards(
-            seen, url_col, expected_urls, fpp, n_shards, salt
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sm_bits, sk = _bloom_params(max(1, expected_urls // n_shards), fpp)
-        bloom_bc = None
-    else:
-        bloom = build_bloom(seen, url_col, expected_urls, fpp, salt)
-        bloom_bc = seen.sparkSession.sparkContext.broadcast(bloom)
-        shards = None
-
-    def flag_df(candidates: DataFrame) -> DataFrame:
-        flagged_schema = StructType(
-            list(candidates.schema.fields)
-            + [StructField("_maybe_seen", BooleanType())]
-        )
-
-        if shards is not None:
-
-            def probe_group(
-                cand: pd.DataFrame, bits_pdf: pd.DataFrame
-            ) -> pd.DataFrame:
-                cand = cand.drop(columns=["shard"])
-                if not len(cand):
-                    return cand.assign(_maybe_seen=np.zeros(0, dtype=bool))
-                if not len(bits_pdf):  # shard holds no seen urls at all
-                    return cand.assign(_maybe_seen=False)
-                bits = np.frombuffer(bits_pdf["bits"].iloc[0], dtype=np.uint8)
-                h1, h2 = _hash2(cand[url_col].to_numpy(), salt)
-                flags = _test_bits(bits, _positions_many(h1, h2, sm_bits, sk))
-                return cand.assign(_maybe_seen=flags)
-
-            flagged = (
-                candidates.withColumn("shard", _shard_col(url_col, n_shards))
-                .groupBy("shard")
-                .cogroup(shards.groupBy("shard"))
-                .applyInPandas(probe_group, flagged_schema)
-            )
-        else:
-
-            def flag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                bf = bloom_bc.value
-                for batch in batches:
-                    yield batch.assign(
-                        _maybe_seen=bf.might_contain_many(
-                            batch[url_col].to_numpy()
-                        )
-                    )
-
-            flagged = candidates.mapInPandas(flag, flagged_schema)
-
-        return flagged
-
-    return flag_df
-
-
-def make_unseen_filter(
-    seen: DataFrame,
-    url_col: str = "url",
-    expected_urls: int = 1_000_000,
-    fpp: float = 0.03,
-    n_shards: int | None = None,
-    salt: bytes = b"frontier",
-):
-    """Build the Bloom side ONCE and return a reusable
-    ``candidates → unseen-candidates`` closure.
-
-    The broadcast bitmap (or the materialized shard DataFrame) is computed
-    here and reused by every application; each application still runs the
-    Python probe over its candidates and anti-joins the Bloom positives
-    against the seen table, which reads the whole table. On 4 cores at 10^6
-    and 10^7 seen URLs the plain anti-join was faster per application for
-    all-seen and for 1%-seen candidates (``BENCH/seen_filter.json``), so
-    the crawl's seen set uses it (:class:`UrlSeenSet`)."""
-    flag_df = _make_bloom_flagger(
-        seen, url_col, expected_urls, fpp, n_shards, salt
-    )
-
-    def apply(candidates: DataFrame) -> DataFrame:
-        flagged = flag_df(candidates)
-        fresh = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        suspects = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        confirmed_new = suspects.join(
-            seen.select(F.col(url_col)), url_col, "left_anti"
-        )
-        return fresh.unionByName(confirmed_new)
-
-    return apply
-
-
 def make_member_filter(
     members: DataFrame,
     key_col: str = "url",
@@ -299,8 +183,8 @@ def make_member_filter(
     n_shards: int | None = None,
     salt: bytes = b"frontier",
 ):
-    """Positive-side twin of :func:`make_unseen_filter`: a reusable
-    ``candidates → candidates whose key IS in members`` closure, exact.
+    """Reusable ``candidates → candidates whose key IS in members`` closure,
+    exact.
 
     The Bloom bitmap stands in for a broadcast hash table when the member
     set is too big to broadcast (a 10^9-gram benchmark-decontamination
@@ -308,52 +192,80 @@ def make_member_filter(
     discarded map-side without any join (no false negatives — a member key
     always flags True), and only the positive slice (~fpp of the stream +
     true hits) meets the member table in an exact semi-join. The candidate
-    stream is never shuffled on the full key space."""
-    flag_df = _make_bloom_flagger(
-        members, key_col, expected_keys, fpp, n_shards, salt
-    )
+    stream is never shuffled on the full key space.
+
+    The Bloom side is built once, here, and reused by every application:
+    one broadcast bitmap, or — with ``n_shards`` or above
+    BROADCAST_BITMAP_BYTES — a persisted DataFrame of per-shard bitmaps that
+    candidates meet through a co-grouped shuffle on the url-hash shard (no
+    bitmap ever reaches the driver or a broadcast)."""
+    m_bits, _ = _bloom_params(expected_keys, fpp)
+    if n_shards is None and m_bits // 8 > BROADCAST_BITMAP_BYTES:
+        n_shards = max(1, math.ceil((m_bits // 8) / SHARD_BITMAP_BYTES))
+
+    from pyspark.sql.types import BooleanType, StructField, StructType
+
+    # each strategy's ``flag_df(candidates, schema)`` appends
+    # ``_maybe_member``, True for every member key (no false negatives)
+    if n_shards is not None:
+        # cache the shard bitmaps: built once on first application, reused
+        # by every later one. persist (not localCheckpoint) keeps lineage,
+        # so a lost executor recomputes its shards instead of failing the
+        # query, and a one-shot caller pays nothing until consumption.
+        from pyspark import StorageLevel
+
+        shards = build_bloom_shards(
+            members, key_col, expected_keys, fpp, n_shards, salt
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        sm_bits, sk = _bloom_params(max(1, expected_keys // n_shards), fpp)
+
+        def probe_group(cand: pd.DataFrame, bits_pdf: pd.DataFrame) -> pd.DataFrame:
+            cand = cand.drop(columns=["shard"])
+            if not len(cand):
+                return cand.assign(_maybe_member=np.zeros(0, dtype=bool))
+            if not len(bits_pdf):  # shard holds no member keys at all
+                return cand.assign(_maybe_member=False)
+            bits = np.frombuffer(bits_pdf["bits"].iloc[0], dtype=np.uint8)
+            h1, h2 = _hash2(cand[key_col].to_numpy(), salt)
+            flags = _test_bits(bits, _positions_many(h1, h2, sm_bits, sk))
+            return cand.assign(_maybe_member=flags)
+
+        def flag_df(candidates: DataFrame, schema: StructType) -> DataFrame:
+            return (
+                candidates.withColumn("shard", _shard_col(key_col, n_shards))
+                .groupBy("shard")
+                .cogroup(shards.groupBy("shard"))
+                .applyInPandas(probe_group, schema)
+            )
+
+    else:
+        bloom = build_bloom(members, key_col, expected_keys, fpp, salt)
+        bloom_bc = members.sparkSession.sparkContext.broadcast(bloom)
+
+        def flag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            bf = bloom_bc.value
+            for batch in batches:
+                flags = bf.might_contain_many(batch[key_col].to_numpy())
+                yield batch.assign(_maybe_member=flags)
+
+        def flag_df(candidates: DataFrame, schema: StructType) -> DataFrame:
+            return candidates.mapInPandas(flag, schema)
 
     def apply(candidates: DataFrame) -> DataFrame:
+        schema = StructType(
+            list(candidates.schema.fields)
+            + [StructField("_maybe_member", BooleanType())]
+        )
         suspects = (
-            flag_df(candidates)
-            .filter(F.col("_maybe_seen"))
-            .drop("_maybe_seen")
+            flag_df(candidates, schema)
+            .filter(F.col("_maybe_member"))
+            .drop("_maybe_member")
         )
         return suspects.join(
             members.select(F.col(key_col)), key_col, "left_semi"
         )
 
     return apply
-
-
-def filter_unseen_with_bloom(
-    candidates: DataFrame,
-    seen: DataFrame,
-    url_col: str = "url",
-    expected_urls: int = 1_000_000,
-    fpp: float = 0.03,
-    n_shards: int | None = None,
-    salt: bytes = b"frontier",
-) -> DataFrame:
-    """Rows of ``candidates`` whose URL is NOT in ``seen`` — the exactness-safe
-    two-stage filter (Bloom prefilter, anti-join confirmation of Bloom
-    positives). Result is provably identical to a plain anti-join: Bloom
-    negatives are definitely-new (no false negatives), positives are
-    confirmed exactly. Only the ~fpp x |candidates| + true-duplicate slice
-    enters the confirming join — but that join still reads the whole seen
-    table, so this form is kept for the ``url_seen_filter`` registry query
-    and for measuring the Bloom, not used by the crawl.
-
-    Strategy: with ``n_shards`` (or when the bitmap exceeds
-    BROADCAST_BITMAP_BYTES) the sharded co-group path runs — candidates
-    shuffle once on the url-hash shard to meet their shard's bitmap; no
-    bitmap ever reaches the driver or a broadcast. Otherwise one bitmap is
-    built and broadcast, and candidates stay in place.
-
-    One-shot form of :func:`make_unseen_filter`."""
-    return make_unseen_filter(
-        seen, url_col, expected_urls, fpp, n_shards, salt
-    )(candidates)
 
 
 class UrlSeenSet:

@@ -3761,20 +3761,24 @@ def decode_tiff_pixels(payload: bytes):
         rows_per_strip = tag_values(278)[0] if 278 in tags else h
         offsets = tag_values(273)
         counts = tag_values(279)
-        if len(offsets) != len(counts):
+        # strip framing: ceil(h / rows_per_strip) strips, each decoding to
+        # exactly its rows (the last one may be short)
+        n_strips = -(-h // rows_per_strip) if rows_per_strip > 0 else -1
+        if not len(offsets) == len(counts) == n_strips:
             return None
         raw = bytearray()
-        for off, cnt in zip(offsets, counts):
+        for k, (off, cnt) in enumerate(zip(offsets, counts)):
             chunk = payload[off : off + cnt]
             if len(chunk) < cnt:
                 return None
-            raw += _packbits_decode(chunk) if compression == 32773 else chunk
-        if len(raw) != h * w * spp:
-            return None
+            strip = _packbits_decode(chunk) if compression == 32773 else chunk
+            rows = min(rows_per_strip, h - k * rows_per_strip)
+            if len(strip) != rows * w * spp:
+                return None
+            raw += strip
         arr = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(h, w, spp)
         if spp == 1:
             arr = np.repeat(arr, 3, axis=2)
-        _ = rows_per_strip  # framing validated via total length
         return arr
     except (struct.error, IndexError, KeyError, ValueError):
         return None

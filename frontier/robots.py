@@ -327,10 +327,11 @@ def fetch_plan_budgeted(
     """R9 priority queue with PER-HOST budgets (north rule: "politeness
     budgets plus robots.txt rules drive a priority queue").
 
-    Same two-level salted top-k as :func:`frontier.schedule.fetch_plan`,
-    but the per-host ``k`` comes from ``budgets`` (host, fetch_budget) —
-    typically :func:`host_budgets_from_delay` output — with
-    ``default_budget`` for unlisted hosts.
+    Ranks with :func:`frontier.schedule.fetch_plan` (the two-level salted
+    top-k) at ``default_budget``, then caps each host at its own budget
+    from ``budgets`` (host, fetch_budget) — typically
+    :func:`host_budgets_from_delay` output — with ``default_budget`` for
+    unlisted hosts.
 
     Contract: ``default_budget`` is the crawl-wide politeness CAP — every
     per-host budget must be ≤ it (``host_budgets_from_delay`` guarantees
@@ -341,35 +342,9 @@ def fetch_plan_budgeted(
     the join touches ≤ hosts × default_budget rows, never the full corpus,
     and the salted result stays identical to the unsalted plan.
     """
-    from frontier.schedule import with_canonical_host
+    from frontier.schedule import fetch_plan
 
-    ordered = (
-        F.col("priority").desc(),
-        F.col("last_modified").desc_nulls_last(),
-        F.col(url_col),
-    )
-    df = with_canonical_host(pages, url_col)
-
-    if salt_buckets > 0:
-        df = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
-        )
-        bucket_rank = F.row_number().over(
-            Window.partitionBy("canonical_host", "_salt").orderBy(*ordered)
-        )
-        df = (
-            df.withColumn("_bucket_rank", bucket_rank)
-            .filter(F.col("_bucket_rank") <= F.lit(default_budget))
-            .drop("_salt", "_bucket_rank")
-        )
-
-    rank = F.row_number().over(
-        Window.partitionBy("canonical_host").orderBy(*ordered)
-    )
-    ranked = df.withColumn("fetch_rank", rank).filter(
-        F.col("fetch_rank") <= F.lit(default_budget)
-    )
-
+    ranked = fetch_plan(pages, default_budget, url_col, salt_buckets)
     budget_side = budgets.select(
         F.col("host").alias("_budget_host"),
         F.col("fetch_budget").alias("_fetch_budget"),

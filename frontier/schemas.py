@@ -117,7 +117,7 @@ PARSE_OUT_SCHEMA = T.StructType(
     ]
 )
 
-# --- lazy page-extraction pass output (flat, one row per page record) ----------
+# --- page sink records (flat, one row per page record) -------------------------
 
 PAGES_FLAT_SCHEMA = T.StructType(
     [

@@ -15,7 +15,6 @@ from __future__ import annotations
 import datetime as _dt
 import hashlib as _hashlib
 import gzip as _gzip
-from email.utils import format_datetime
 from typing import Iterator
 
 import numpy as np
@@ -29,7 +28,6 @@ TEST_DATE = _dt.datetime(
     2009, 12, 17, 12, 4, 56, tzinfo=_dt.timezone(_dt.timedelta(hours=2))
 )
 TEST_DATE_ISO = TEST_DATE.isoformat()
-TEST_DATE_RFC2822 = format_datetime(TEST_DATE)
 TEST_PUBLICATION_NAME = "Test publication"
 TEST_PUBLICATION_LANGUAGE = "en"
 

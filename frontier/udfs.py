@@ -7,9 +7,10 @@ test harness, tests/tree/base.py:31-39, never reaches this stage).
 Output: the flat union PARSE_OUT_SCHEMA — ``node`` rows (one per consumed
 pending row, with a page COUNT only) and ``child`` rows (ready-made pending
 rows for the next wave with depth-limit / ancestor-cycle pre-checks already
-applied). Page records are extracted in a separate lazy pass
-(:func:`parse_pages`) that runs once over leaf bodies at consumption time —
-see the rationale in schemas.py.
+applied). Page records leave the same expat pass through a side channel:
+each task streams them to its own parquet file in the wave's page sink
+(:class:`_PageSink`, schema ``PAGES_FLAT_SCHEMA``), which ``forest.pages``
+reads back.
 
 The stage is columnar end-to-end: Arrow batch in → per-column Python lists →
 ``pa.RecordBatch`` out. No pandas materialization, no dict-per-row churn —
@@ -231,9 +232,7 @@ class _Out:
         self.n += 1
 
 
-def process_pending_row(
-    row: dict[str, Any], out: _Out, pages: "_PageSink | None" = None
-) -> None:
+def process_pending_row(row: dict[str, Any], out: _Out, pages: "_PageSink") -> None:
     """Consume one pending row (+ its fetch result) → node/page/child rows."""
     base = row
 
@@ -268,14 +267,13 @@ def process_pending_row(
     text = decode_sitemap_body(
         final_url, row["content_type"], bytes(body), K.MAX_SITEMAP_BYTES
     )
-    # With a page sink attached, this is the ONLY expat pass over the body:
-    # page records go straight from the parser to the sink's parquet stream
-    # and never transit node rows or get re-parsed (count_only mode survives
-    # for sink-less callers).
-    doc = K.parse_sitemap_text(final_url, text, count_only=pages is None)
+    # the ONLY expat pass over the body: page records go straight from the
+    # parser to the sink's parquet stream and never transit node rows or get
+    # re-parsed
+    doc = K.parse_sitemap_text(final_url, text)
 
     out.node(base, final_url, doc.kind, doc.reason, doc.page_count)
-    if pages is not None and doc.pages:
+    if doc.pages:
         pages.add_doc(base["seed"], final_url, base["path_key"], doc)
 
     child_level = row["level"] + 1
@@ -299,9 +297,6 @@ def process_pending_row(
             child_parents,
             blocked,
         )
-
-
-_PAGES_IN_COLUMNS = ["seed", "sitemap_url", "path_key", "content_type", "body"]
 
 
 class _PagesOut:
@@ -400,51 +395,17 @@ class _PageSink:
                 pass
 
 
-def parse_pages(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow kernel for the lazy page-extraction pass.
-
-    Input: leaf-node rows re-joined with their store bodies
-    ``(seed, sitemap_url, path_key, content_type, body)`` where
-    ``sitemap_url`` is the node's final URL (the parse base URL, matching
-    what the wave parse used). Output: one flat row per page record,
-    declaration order preserved in ``seq`` — identical records to what a
-    single-pass parse would have produced (the kernel is deterministic), but
-    with zero intermediate materialization between store and consumer."""
-    out = _PagesOut()
-    for batch in batches:
-        names = batch.schema.names
-        cols = [
-            batch.column(names.index(c)).to_pylist()
-            if c in names
-            else [None] * batch.num_rows
-            for c in _PAGES_IN_COLUMNS
-        ]
-        for seed, sitemap_url, path_key, content_type, body in zip(*cols):
-            text = decode_sitemap_body(
-                sitemap_url, content_type, bytes(body or b""), K.MAX_SITEMAP_BYTES
-            )
-            doc = K.parse_sitemap_text(sitemap_url, text)
-            out.add_doc(seed, sitemap_url, path_key, doc)
-            if out.n >= _FLUSH_ROWS:
-                yield out.flush()
-    if out.n:
-        yield out.flush()
-
-
-def make_parse_wave(pages_dir: str | None):
+def make_parse_wave(pages_dir: str):
     """Build the mapInArrow kernel over (pending ⨝ fetches) rows.
 
-    With ``pages_dir``, full page records are side-written to one parquet
-    file per task under it (see :class:`_PageSink`) — one expat pass per
-    body. Without it, the kernel counts pages only (legacy lazy mode)."""
+    Full page records are side-written to one parquet file per task under
+    ``pages_dir`` (see :class:`_PageSink`) — one expat pass per body."""
 
     def parse_wave(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sink = None
-        if pages_dir is not None:
-            from pyspark import TaskContext
+        from pyspark import TaskContext
 
-            ctx = TaskContext.get()
-            sink = _PageSink(pages_dir, ctx.partitionId() if ctx else 0)
+        ctx = TaskContext.get()
+        sink = _PageSink(pages_dir, ctx.partitionId() if ctx else 0)
         out = _Out()
         try:
             for batch in batches:
@@ -462,16 +423,10 @@ def make_parse_wave(pages_dir: str | None):
             if out.n:
                 yield out.flush()
         except BaseException:
-            if sink is not None:
-                sink.abort()
+            sink.abort()
             raise
         else:
-            if sink is not None:
-                sink.close()
+            sink.close()
 
     return parse_wave
 
-
-#: Sink-less kernel (page counts only) — the pre-sink surface, kept for
-#: callers that only need node/child metadata.
-parse_wave = make_parse_wave(None)

@@ -33,8 +33,6 @@ TRACKING_PARAM_RE = r"^(utm_[a-z]+|gclid|fbclid|msclkid)="
 
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*)://"
 _HOSTPORT_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)"
-_PATH_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)"
-_QUERY_RE = r"\?([^#]*)"
 #: raw path + query (no fragment) — the RFC 9309 robots match target
 _PATHQUERY_RE = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^#]*)"
 

@@ -414,9 +414,7 @@ def open_fetch_store(spark: SparkSession, path: str) -> DataFrame:
     return store
 
 
-def prepare_fetches(
-    fetches: DataFrame, cache: bool = False, resolve_redirects: bool = True
-) -> DataFrame:
+def prepare_fetches(fetches: DataFrame, resolve_redirects: bool = True) -> DataFrame:
     """Normalize a fetch store: final_url defaulted, 3xx chains resolved.
 
     The synthetic store plays the role of the live HTTP boundary
@@ -433,12 +431,11 @@ def prepare_fetches(
     shuffle every payload body in the store on every wave. Duplicates are
     dropped per wave on the (tiny) matched slice in ``_fetch_join`` instead.
 
-    Defaults are the scale-safe path: ``cache=False`` leaves the scan
-    plan untouched (per-wave broadcast semi-joins against a partition-pruned
-    store — the only feasible plan at 100 TB; also measured FASTER than the
-    columnar cache at bench scale, where decompressed-body caching costs
-    more in memory pressure than it saves in IO). Opt into ``cache=True``
-    only for small stores consumed by many actions.
+    The store is never cached: the scan plan stays untouched (per-wave
+    broadcast semi-joins against a partition-pruned store — the only
+    feasible plan at 100 TB; also measured FASTER than the columnar cache
+    at bench scale, where decompressed-body caching costs more in memory
+    pressure than it saves in IO).
     """
     cols = dict.fromkeys(fetches.columns)
     out = fetches
@@ -467,8 +464,6 @@ def prepare_fetches(
         # resolve_redirects=False for a store known to be pre-resolved
         # (e.g. an offline-resolved Iceberg store, or a synthetic corpus)
         out = _resolve_redirects(out)
-    if cache:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
     return out
 
 
@@ -561,9 +556,9 @@ class _WaveRunner:
         recurse_filter: RecurseFilter | None,
         checkpoint_dir: str | None,
         phase: str,
+        pages_dir: str,
         resume: bool = False,
         store_urls_unique: bool = False,
-        pages_dir: str | None = None,
         seen_filter=None,
     ) -> None:
         self.spark = spark
@@ -593,9 +588,7 @@ class _WaveRunner:
             )
         )
 
-    def _pages_wave_dir(self, wave: int) -> str | None:
-        if self.pages_dir is None:
-            return None
+    def _pages_wave_dir(self, wave: int) -> str:
         return os.path.join(self.pages_dir, f"phase={self.phase}", f"wave={wave}")
 
     def _snapshot(self, df: DataFrame, wave: int, skip_recompute: bool) -> DataFrame:
@@ -656,10 +649,8 @@ class _WaveRunner:
         return pending, [r["b"] for r in rows], sum(r["count"] for r in rows)
 
     def _run(self, pending: DataFrame) -> None:
-        import sys
         import time
 
-        trace = bool(os.environ.get("FRONTIER_WAVE_TIMING"))
         wave = 0
         # small-side partition cap: pending/node/child rows are tiny and feed
         # broadcasts + driver checks; scanning them over the parse stage's
@@ -683,7 +674,7 @@ class _WaveRunner:
             joined = self._fetch_join(fetchable, blocked, buckets, pending_rows)
             skip = self._wave_committed(wave)
             pages_dir = self._pages_wave_dir(wave)
-            if pages_dir is not None and not skip:
+            if not skip:
                 # recomputing: clear stale page files (a previous run at a
                 # different partitioning would otherwise leave orphans that
                 # duplicate pages on read-back)
@@ -695,12 +686,6 @@ class _WaveRunner:
                 wave,
                 skip,
             )
-            if trace:
-                print(
-                    f"[wave {self.phase}/{wave}] parse+snapshot "
-                    f"{time.perf_counter() - t0:.2f}s",
-                    file=sys.stderr,
-                )
             # store misses (the mock harness's 404 fallback,
             # tests/tree/base.py:31-39): pending rows whose URL produced no
             # node row. Derived from the (checkpointed) parse output instead
@@ -743,14 +728,7 @@ class _WaveRunner:
             ).coalesce(small_cap)
             t_plan = time.perf_counter()
             pending, buckets, pending_rows = self._close(pending)
-            t_pending = time.perf_counter()
-            if trace:
-                print(
-                    f"[wave {self.phase}/{wave}] expand+close "
-                    f"{t_pending - t0:.2f}s total",
-                    file=sys.stderr,
-                )
-            self._record(wave, t0, t_plan, t_pending)
+            self._record(wave, t0, t_plan, time.perf_counter())
             if not pending_rows:
                 break
             wave += 1
@@ -963,7 +941,6 @@ def sitemap_tree_for_homepages(
     recurse_callback: RecurseCallback | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    cache_fetch_store: bool = False,
     store_urls_unique: bool | None = None,
     fetches_prepared: bool = False,
     seen_set=None,
@@ -1006,7 +983,7 @@ def sitemap_tree_for_homepages(
     if store_urls_unique is None:
         store_urls_unique = getattr(fetches, "_frontier_urls_unique", False)
     if not fetches_prepared:
-        fetches = prepare_fetches(fetches, cache=cache_fetch_store)
+        fetches = prepare_fetches(fetches)
     if recurse_callback is not None:
         # reference applies the list callback to the candidate list first,
         # then the per-URL predicate to each survivor (fetch_parse.py:345-363)
@@ -1053,8 +1030,8 @@ def sitemap_tree_for_homepages(
     seen_filter = seen_set.prepare_filter("url") if seen_set is not None else None
 
     runner_a = _WaveRunner(
-        spark, fetches, recurse_filter, checkpoint_dir, "robots", resume,
-        store_urls_unique, pages_root, seen_filter,
+        spark, fetches, recurse_filter, checkpoint_dir, "robots", pages_root,
+        resume, store_urls_unique, seen_filter,
     )
     if use_robots:
         pending0 = seeds.select(
@@ -1086,8 +1063,8 @@ def sitemap_tree_for_homepages(
     robots_found = robots_nodes.filter(F.col("level") >= 1).select("seed", "url")
 
     runner_b = _WaveRunner(
-        spark, fetches, recurse_filter, checkpoint_dir, "known_paths", resume,
-        store_urls_unique, pages_root, seen_filter,
+        spark, fetches, recurse_filter, checkpoint_dir, "known_paths",
+        pages_root, resume, store_urls_unique, seen_filter,
     )
     if use_known_paths:
         import pandas as pd
@@ -1133,13 +1110,6 @@ def sitemap_tree_for_homepages(
     everything = outputs[0]
     for extra in outputs[1:]:
         everything = everything.unionByName(extra)
-
-    if cache_fetch_store and not fetches_prepared:
-        # wave outputs are snapshotted (lineage truncated) and pages were
-        # side-written to parquet during the waves, so NOTHING in the result
-        # forest references the cached store anymore; a caller-prepared
-        # store is the caller's to unpersist
-        fetches.unpersist(blocking=False)
 
     forest = _assemble(spark, seeds, everything, pages_root, owns_pages)
     forest._wave_frames = runner_a.wave_frames + runner_b.wave_frames
@@ -1377,6 +1347,9 @@ def _to_json_tree(forest: SitemapForest, with_pages: bool) -> DataFrame:
     )
 
 
+_FROM_STR_URL = "http://usp-local-dummy.local/"
+
+
 def sitemap_from_str(content: str) -> K.ParsedDoc:
     """Parse one sitemap payload from a string with recursion disabled — the
     reference ``sitemap_from_str`` (usp/tree.py:133-142): children of an index
@@ -1385,7 +1358,7 @@ def sitemap_from_str(content: str) -> K.ParsedDoc:
     JVM-free: returns the kernel's ParsedDoc; pair with
     :func:`unfetched_children` to mirror the reference tree shape.
     """
-    return K.parse_sitemap_text("http://usp-local-dummy.local/", content)
+    return K.parse_sitemap_text(_FROM_STR_URL, content)
 
 
 def unfetched_children(doc: K.ParsedDoc) -> list[dict]:
@@ -1395,9 +1368,6 @@ def unfetched_children(doc: K.ParsedDoc) -> list[dict]:
         {"url": child, "kind": K.KIND_INVALID, "reason": "Un-fetched child sitemap"}
         for child in doc.children
     ]
-
-
-_FROM_STR_URL = "http://usp-local-dummy.local/"
 
 
 def sitemap_forest_from_str(spark: SparkSession, content: str) -> SitemapForest:

@@ -37,8 +37,7 @@ def run_level(cpus: int, corpus_path: str, n_hosts: int) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         corpus = prepare_fetches(
-            spark.read.parquet(corpus_path), cache=False,
-            resolve_redirects=False,
+            spark.read.parquet(corpus_path), resolve_redirects=False
         )
         seeds = [f"http://deep{i}.example.com/" for i in range(n_hosts)]
 

@@ -56,7 +56,7 @@ def main() -> None:
             corpus_path,
         )
         corpus = prepare_fetches(
-            spark.read.parquet(corpus_path), cache=False, resolve_redirects=False
+            spark.read.parquet(corpus_path), resolve_redirects=False
         )
         seeds = [f"http://host{i}.example.com/" for i in range(n_hosts)]
         # seen set sized for the sitemap URL population (robots + index +

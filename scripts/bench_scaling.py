@@ -67,7 +67,7 @@ def run_level_once(cpus: int, corpus_path: str, n_hosts: int) -> dict:
         # store preparation is once-per-store work (an Iceberg store would be
         # redirect-resolved offline), not per-crawl — prepared outside timing
         corpus = prepare_fetches(
-            spark.read.parquet(corpus_path), cache=False, resolve_redirects=False
+            spark.read.parquet(corpus_path), resolve_redirects=False
         )
         seeds = [f"http://host{i}.example.com/" for i in range(n_hosts)]
 

@@ -1,20 +1,22 @@
-"""Seen-filter benchmark: Bloom prefilter + anti-join confirmation versus the
-plain exact anti-join, per application, at 10^6 and 10^7 seen URLs.
+"""Seen-filter benchmark: the crawl's exact left-anti join against the
+seen table, per application, at 10^6 and 10^7 seen URLs.
 
-For each seen-table size the Bloom side is built once (timed), then each
-candidate set is filtered ``--reps`` times by both variants, alternating:
+Each candidate set is filtered ``--reps`` times:
 
 - ``all_seen``: 384 URLs, every one in the seen table (a recrawl frontier
-  with nothing new: the Bloom can reject nothing);
-- ``one_pct_seen``: 10^4 URLs, 1% in the seen table (a mostly-new frontier:
-  the Bloom rejects ~99% of candidates before the join).
+  with nothing new);
+- ``one_pct_seen``: 10^4 URLs, 1% in the seen table (a mostly-new
+  frontier).
 
-Both variants must return the same count; the script exits non-zero
-otherwise. Bloom sizing is fpp 0.01 over the seen-table size.
+Every application must return the closed-form unseen count (0 and 9,900);
+the script exits non-zero otherwise.
 
     SPARK_GRAFT_CPUS=4 SPARK_GRAFT_MEM=3g python scripts/bench_seen_filter.py
 
-Writes BENCH/seen_filter.json (medians, quartiles, min/max of each variant).
+Prints one JSON report (median, quartiles, min/max per candidate set).
+``BENCH/seen_filter.json`` holds an earlier run of this script that also
+timed a Bloom prefilter with anti-join confirmation in front of the same
+join; the Bloom arm was slower in every cell and has been removed.
 """
 
 from __future__ import annotations
@@ -31,8 +33,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from bench import SCRATCH, build_spark  # noqa: E402
-
-FPP = 0.01
 
 
 def _spread(samples: list[float]) -> dict:
@@ -56,7 +56,7 @@ def _timed(fn) -> tuple[float, int]:
 def measure(spark, workdir: str, n_seen: int, reps: int) -> dict:
     from pyspark.sql import functions as F
 
-    from frontier.dedup import UrlSeenSet, make_unseen_filter
+    from frontier.dedup import UrlSeenSet
 
     def urls(ids):
         return ids.select(
@@ -69,45 +69,42 @@ def measure(spark, workdir: str, n_seen: int, reps: int) -> dict:
 
     path = os.path.join(workdir, f"seen-{n_seen}")
     urls(spark.range(n_seen)).write.mode("overwrite").parquet(path)
-    seen_set = UrlSeenSet(spark, path, expected_urls=n_seen, fpp=FPP)
-    seen = spark.read.parquet(path)
-
-    build_s, bloom_filter = _timed(
-        lambda: make_unseen_filter(seen, "url", n_seen, FPP)
-    )
-    anti_join = seen_set.prepare_filter("url")
+    anti_join = UrlSeenSet(spark, path).prepare_filter("url")
     candidate_sets = {
         # every candidate seen: ids spread over the whole table
-        "all_seen": urls(
-            spark.range(384).select((F.col("id") * (n_seen // 384)).alias("id"))
+        "all_seen": (
+            urls(
+                spark.range(384).select(
+                    (F.col("id") * (n_seen // 384)).alias("id")
+                )
+            ),
+            0,
         ),
         # 100 seen ids, 9900 ids past the table's end
-        "one_pct_seen": urls(
-            spark.range(10_000).select(
-                F.when(F.col("id") < 100, F.col("id") * (n_seen // 100))
-                .otherwise(F.col("id") + n_seen)
-                .alias("id")
-            )
+        "one_pct_seen": (
+            urls(
+                spark.range(10_000).select(
+                    F.when(F.col("id") < 100, F.col("id") * (n_seen // 100))
+                    .otherwise(F.col("id") + n_seen)
+                    .alias("id")
+                )
+            ),
+            9_900,
         ),
     }
-    out = {"seen_urls": n_seen, "bloom_build_s": round(build_s, 3)}
-    for name, cand in candidate_sets.items():
+    out = {"seen_urls": n_seen}
+    for name, (cand, unseen) in candidate_sets.items():
         cand = cand.localCheckpoint(eager=True)
-        times: dict[str, list[float]] = {"bloom_confirm": [], "anti_join": []}
-        counts = set()
+        times = []
         for _ in range(reps):
-            for variant, flt in (
-                ("bloom_confirm", bloom_filter), ("anti_join", anti_join),
-            ):
-                seconds, n = _timed(lambda: flt(cand).count())
-                times[variant].append(seconds)
-                counts.add(n)
-        if len(counts) != 1:
-            raise SystemExit(f"{name} at {n_seen}: variants disagree {counts}")
+            seconds, n = _timed(lambda: anti_join(cand).count())
+            if n != unseen:
+                raise SystemExit(f"{name} at {n_seen}: {n} unseen, want {unseen}")
+            times.append(seconds)
         out[name] = {
             "candidates": cand.count(),
-            "unseen": counts.pop(),
-            **{variant: _spread(ts) for variant, ts in times.items()},
+            "unseen": unseen,
+            "anti_join": _spread(times),
         }
     shutil.rmtree(path, ignore_errors=True)
     return out
@@ -132,13 +129,10 @@ def main() -> None:
     report = {
         "cores": cpus,
         "heap": os.environ["SPARK_GRAFT_MEM"],
-        "fpp": FPP,
         "reps": args.reps,
         "results": results,
     }
     print(json.dumps(report))
-    with open(os.path.join(ROOT, "BENCH", "seen_filter.json"), "w") as fh:
-        json.dump(report, fh, indent=1)
 
 
 if __name__ == "__main__":

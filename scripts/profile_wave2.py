@@ -6,8 +6,7 @@ Layers, each timed after one warm-up pass:
   scan      leaf-bucket parquet scan + sum(length(body))      (JVM only)
   join      + broadcast semi-join of the wave's URL set       (JVM only)
   arrow     + mapInArrow passthrough kernel (no parse)        (+Arrow+worker)
-  parse     + real kernel, count_only (no page records)       (+expat)
-  full      + page records to a tmpfs sink                    (everything)
+  full      + real kernel, page records to a tmpfs sink       (everything)
 
 The gap between consecutive layers attributes wall time; comparing runs at
 local[8] vs local[32] shows which layer stops scaling.
@@ -92,37 +91,6 @@ def main() -> None:
         lambda: joined()
         .mapInArrow(passthrough, "n long")
         .agg(F.count("*"))
-        .collect(),
-    )
-    def timed_kernel(pages_dir):
-        inner = make_parse_wave(pages_dir)
-
-        def kernel(batches):
-            t0 = time.perf_counter()
-            c0 = time.process_time()
-            rows = 0
-
-            def counting():
-                nonlocal rows
-                for b in batches:
-                    rows += b.num_rows
-                    yield b
-
-            yield from inner(counting())
-            print(
-                f"[task] rows={rows} cpu={time.process_time() - c0:.2f} "
-                f"wall={time.perf_counter() - t0:.2f}",
-                file=sys.stderr,
-                flush=True,
-            )
-
-        return kernel
-
-    t(
-        "parse",
-        lambda: joined()
-        .mapInArrow(timed_kernel(None), PARSE_OUT_SCHEMA)
-        .agg(F.sum("n_pages"))
         .collect(),
     )
     import tempfile

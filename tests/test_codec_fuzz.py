@@ -610,3 +610,39 @@ def test_ogg_trailing_junk_rejected():
     assert parse_ogg_metadata(payload + b"junk after the last page") is None
     assert parse_ogg_metadata(payload + b"\x00") is None  # < header size
     assert parse_ogg_metadata(payload + b"OggS") is None  # truncated header
+
+
+def test_tiff_misframed_strips_rejected():
+    """Strip framing is checked strip by strip, not only in total: a file
+    whose strips hold exactly h*w*spp bytes but disagree with RowsPerStrip
+    (wrong strip count, or rows shifted between strips) decodes to None."""
+    import struct
+
+    from frontier.multimodal import decode_tiff_pixels, encode_tiff
+
+    px = (np.arange(4 * 3 * 3) % 256).astype(np.uint8).reshape(4, 3, 3)
+    payload = encode_tiff(px, rows_per_strip=2)  # 2 strips of 2 rows
+    assert np.array_equal(decode_tiff_pixels(payload), px)
+
+    def entry(tag):  # little-endian IFD at offset 8
+        (n,) = struct.unpack_from("<H", payload, 8)
+        for k in range(n):
+            pos = 10 + 12 * k
+            if struct.unpack_from("<H", payload, pos)[0] == tag:
+                return pos
+        raise KeyError(tag)
+
+    # RowsPerStrip 1 calls for 4 strips; the file holds 2
+    one_row = bytearray(payload)
+    struct.pack_into("<H", one_row, entry(278) + 8, 1)
+    assert decode_tiff_pixels(bytes(one_row)) is None
+
+    # right strip count, but strips of 1 and 3 rows instead of 2 and 2
+    row = 3 * 3
+    uneven = bytearray(payload)
+    (offs_at,) = struct.unpack_from("<I", payload, entry(273) + 8)
+    (counts_at,) = struct.unpack_from("<I", payload, entry(279) + 8)
+    (first,) = struct.unpack_from("<I", payload, offs_at)
+    struct.pack_into("<2I", uneven, offs_at, first, first + row)
+    struct.pack_into("<2I", uneven, counts_at, row, 3 * row)
+    assert decode_tiff_pixels(bytes(uneven)) is None

@@ -106,7 +106,7 @@ def test_filter_pushdown_reaches_scan(spark, tmp_path):
 
 def test_prepare_fetches_default_plan_scale_safe(spark, tmp_path):
     """Naive-caller defaults must be the 100-TB-safe path: no columnar cache
-    of the store (cache=False default), and for a 3xx-free store the
+    of the store, and for a 3xx-free store the
     prepared frame is the plain scan. With redirects present, resolution
     broadcasts only url metadata — the body-carrying scan never sits under
     a BroadcastExchange."""

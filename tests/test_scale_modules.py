@@ -123,45 +123,13 @@ def test_recrawl_plan_semantics(spark):
     assert "Exchange" not in phys and "Python" not in phys
 
 
-def test_filter_unseen_with_bloom_exactness(spark):
-    """Bloom prefilter + anti-join must equal the plain anti-join exactly,
-    at an fpp high enough that false positives genuinely occur."""
-    from frontier.dedup import build_bloom, filter_unseen_with_bloom
-
-    candidates = spark.createDataFrame(
-        [(f"http://c{i % 700}.com/p{i % 900}",) for i in range(3000)], "url string"
-    ).distinct()
-    seen = spark.createDataFrame(
-        [(f"http://c{i % 500}.com/p{i % 600}",) for i in range(2000)], "url string"
-    ).distinct()
-
-    got = sorted(
-        r.url
-        for r in filter_unseen_with_bloom(
-            candidates, seen, expected_urls=256, fpp=0.3
-        ).collect()
-    )
-    want = sorted(r.url for r in candidates.join(seen, "url", "left_anti").collect())
-    assert got == want
-
-    # the tight bloom must actually fire false positives on this input,
-    # otherwise the confirmation path was never exercised
-    bloom = build_bloom(seen, "url", 256, 0.3)
-    seen_urls = {r.url for r in seen.collect()}
-    fp = sum(
-        1
-        for r in candidates.collect()
-        if r.url not in seen_urls and bloom.might_contain(r.url)
-    )
-    assert fp > 0
-
-
 def test_filter_unseen_sharded_10m_keys(spark):
-    """Sharded strategy (R8 at scale): 10^7 seen keys split across 8
+    """Sharded Bloom strategy at scale: 10^7 seen keys split across 8
     hash-range shards, candidates meeting their shard's bitmap through the
-    co-grouped shuffle — no driver collect, no broadcast — and the result
-    still equals the plain anti-join exactly."""
-    from frontier.dedup import build_bloom_shards, filter_unseen_with_bloom
+    co-grouped shuffle — no driver collect, no broadcast. The member filter
+    still equals the plain semi-join exactly, so the candidates it leaves
+    out are exactly the unseen ones."""
+    from frontier.dedup import build_bloom_shards, make_member_filter
 
     n_seen = 10_000_000
     seen = spark.range(n_seen).selectExpr(
@@ -174,11 +142,13 @@ def test_filter_unseen_sharded_10m_keys(spark):
         "CAST(id * 97 + (id % 2) * 30000000 AS STRING)) AS url"
     ).distinct()
 
-    got = filter_unseen_with_bloom(
-        candidates, seen, expected_urls=n_seen, fpp=0.03, n_shards=8
-    )
-    want = candidates.join(seen, "url", "left_anti")
-    assert got.count() == want.count()
+    got = make_member_filter(
+        seen, expected_keys=n_seen, fpp=0.03, n_shards=8
+    )(candidates)
+    want = candidates.join(seen, "url", "left_semi")
+    n_seen_candidates = want.count()
+    assert n_seen_candidates > 0
+    assert got.count() == n_seen_candidates
     assert got.join(want, "url", "left_anti").isEmpty()
 
     # shard layout sanity: 8 bitmaps, none empty at this fill

@@ -5,7 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from frontier.dedup import UrlSeenSet, make_unseen_filter
+from frontier.datapipe import REGISTRY
+from frontier.dedup import UrlSeenSet
 from frontier.synth import reference_site_fetches, synth_crawl_corpus
 from frontier.waves import LAST_WAVE_TIMINGS, sitemap_tree_for_homepages
 
@@ -27,29 +28,16 @@ def _crawl(spark, corpus, n_hosts, **kw):
     )
 
 
-def test_make_unseen_filter_reusable(spark):
-    seen = spark.createDataFrame(
-        [(f"http://s.com/p{i}",) for i in range(0, 100, 2)], "url string"
-    )
-    flt = make_unseen_filter(seen, expected_urls=256, fpp=0.1)
-    cand_a = spark.createDataFrame(
-        [(f"http://s.com/p{i}",) for i in range(50)], "url string"
-    )
-    cand_b = spark.createDataFrame(
-        [(f"http://s.com/p{i}",) for i in range(50, 100)], "url string"
-    )
-    # two applications of ONE prepared filter, each exactly ≡ anti-join
-    for cand in (cand_a, cand_b):
-        got = {r["url"] for r in flt(cand).collect()}
-        expect = {
-            r["url"] for r in cand.join(seen, "url", "left_anti").collect()
-        }
-        assert got == expect
+def _assert_one_jvm_anti_join(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" in plan
+    assert [n for n in _PYTHON_NODES if n in plan] == []
 
 
 def test_seen_filter_is_one_jvm_anti_join(spark, tmp_path):
-    """The crawl's seen filter plans as a plain left-anti join: no Python
-    worker node anywhere in its physical plan, and its result is exact."""
+    """The crawl's seen filter, and the ``url_seen_filter`` registry query
+    built on the same join, plan as a plain left-anti join: no Python
+    worker node anywhere in their physical plans, and the result is exact."""
     seen = UrlSeenSet(spark, str(tmp_path / "seen"), expected_urls=256, fpp=0.1)
     seen.record_seen(
         spark.createDataFrame(
@@ -60,11 +48,20 @@ def test_seen_filter_is_one_jvm_anti_join(spark, tmp_path):
         [(f"http://s.com/p{i}",) for i in range(100)], "url string"
     )
     unseen = seen.prepare_filter("url")(candidates)
-    plan = unseen._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
-    assert [n for n in _PYTHON_NODES if n in plan] == []
+    _assert_one_jvm_anti_join(unseen)
     assert sorted(r["url"] for r in unseen.collect()) == sorted(
         f"http://s.com/p{i}" for i in range(1, 100, 2)
+    )
+
+    # the registry query reads events.event_id and documents.doc_id only
+    spark.range(300).selectExpr("id AS event_id").write.parquet(
+        str(tmp_path / "events.parquet")
+    )
+    spark.range(200).selectExpr("id AS doc_id").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    _assert_one_jvm_anti_join(
+        REGISTRY["url_seen_filter"].build(spark, str(tmp_path))
     )
 
 

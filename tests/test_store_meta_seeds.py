@@ -81,7 +81,8 @@ def test_unique_store_wave_join_has_no_body_exchange(spark, tmp_path):
         return df._jdf.queryExecution().executedPlan().toString()
 
     unique_runner = _WaveRunner(
-        spark, prepared, None, None, "t", store_urls_unique=True
+        spark, prepared, None, None, "t", str(tmp_path / "pages"),
+        store_urls_unique=True,
     )
     # the frontier close supplies the wave's bucket list and size
     pend, buckets, rows = unique_runner._close(pend)
@@ -90,7 +91,8 @@ def test_unique_store_wave_join_has_no_body_exchange(spark, tmp_path):
     assert "BroadcastHashJoin" in plan
 
     unknown_runner = _WaveRunner(
-        spark, prepared, None, None, "t", store_urls_unique=False
+        spark, prepared, None, None, "t", str(tmp_path / "pages"),
+        store_urls_unique=False,
     )
     plan2 = physical(unknown_runner._fetch_join(pend, empty, buckets, rows))
     # the per-wave max_by dedup exchange, carrying body — exactly what the
