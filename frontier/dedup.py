@@ -198,7 +198,11 @@ def make_member_filter(
     one broadcast bitmap, or — with ``n_shards`` or above
     BROADCAST_BITMAP_BYTES — a persisted DataFrame of per-shard bitmaps that
     candidates meet through a co-grouped shuffle on the url-hash shard (no
-    bitmap ever reaches the driver or a broadcast)."""
+    bitmap ever reaches the driver or a broadcast).
+
+    ``release()`` on the returned closure frees that Bloom side (unpersists
+    the shard bitmaps, or destroys the broadcast bitmap); call it once no
+    DataFrame the closure returned is read any more."""
     m_bits, _ = _bloom_params(expected_keys, fpp)
     if n_shards is None and m_bits // 8 > BROADCAST_BITMAP_BYTES:
         n_shards = max(1, math.ceil((m_bits // 8) / SHARD_BITMAP_BYTES))
@@ -238,6 +242,9 @@ def make_member_filter(
                 .applyInPandas(probe_group, schema)
             )
 
+        def release() -> None:
+            shards.unpersist()
+
     else:
         bloom = build_bloom(members, key_col, expected_keys, fpp, salt)
         bloom_bc = members.sparkSession.sparkContext.broadcast(bloom)
@@ -250,6 +257,9 @@ def make_member_filter(
 
         def flag_df(candidates: DataFrame, schema: StructType) -> DataFrame:
             return candidates.mapInPandas(flag, schema)
+
+        def release() -> None:
+            bloom_bc.destroy()
 
     def apply(candidates: DataFrame) -> DataFrame:
         schema = StructType(
@@ -265,6 +275,7 @@ def make_member_filter(
             members.select(F.col(key_col)), key_col, "left_semi"
         )
 
+    apply.release = release
     return apply
 
 

@@ -235,10 +235,12 @@ def robots_filter(
 ) -> DataFrame:
     """Apply a per-host rules snapshot to a URL DataFrame.
 
-    Adds ``robots_allowed`` (boolean) and ``robots_matched_plen`` (int,
+    Adds ``robots_crawl_delay`` (the host's Crawl-delay, NULL without
+    one), ``robots_allowed`` (boolean) and ``robots_matched_plen`` (int,
     NULL when no rule matched) and, unless ``keep_disallowed``, drops the
-    disallowed rows.  URLs whose host has no snapshot row, or whose rule
-    array is empty, are allowed (RFC 9309 §2.2.1).
+    disallowed rows and the last two columns.  URLs whose host has no
+    snapshot row, or whose rule array is empty, are allowed (RFC 9309
+    §2.2.1).
 
     Plan shape: one left equi-join on host (broadcast when
     ``broadcast_rules``), then codegen-only column expressions — the rule
@@ -290,6 +292,18 @@ def robots_filter(
     return out
 
 
+def _delay_budget(delay: Column, round_seconds: float, default_budget: int) -> Column:
+    """The budget formula: ``max(1, floor(round_seconds / delay))`` capped
+    at ``default_budget``; a NULL or non-positive delay keeps the default."""
+    from_delay = F.greatest(
+        F.lit(1),
+        F.floor(F.lit(float(round_seconds)) / delay).cast("int"),
+    )
+    return F.when(
+        delay.isNull() | (delay <= 0), F.lit(default_budget)
+    ).otherwise(F.least(F.lit(default_budget), from_delay))
+
+
 def host_budgets_from_delay(
     rules: DataFrame,
     round_seconds: float,
@@ -302,18 +316,11 @@ def host_budgets_from_delay(
     than ``default_budget`` (the crawl-wide politeness cap); hosts without a
     delay keep the default.  Output: (host, fetch_budget).
     """
-    delay = F.col("crawl_delay")
-    from_delay = F.greatest(
-        F.lit(1),
-        F.floor(F.lit(float(round_seconds)) / delay).cast("int"),
-    )
     return rules.select(
         "host",
-        F.when(
-            delay.isNull() | (delay <= 0), F.lit(default_budget)
-        )
-        .otherwise(F.least(F.lit(default_budget), from_delay))
-        .alias("fetch_budget"),
+        _delay_budget(F.col("crawl_delay"), round_seconds, default_budget).alias(
+            "fetch_budget"
+        ),
     )
 
 
@@ -386,6 +393,11 @@ def robots_rules_from_store(
     the store is scanned once with a pushed-down semi-join; bodies are
     decoded (gzip-sniffed, utf-8-sig) and parsed in one Arrow kernel over
     one row per host.
+
+    Pass the store as the crawl read it (:func:`frontier.waves.
+    prepare_fetches` output) so a redirected robots.txt counts by the
+    response it lands on, as in the crawl; a raw 3xx row is neither 2xx
+    nor 5xx and yields no snapshot row.
 
     Status semantics (RFC 9309 §2.3.1):
 
@@ -470,43 +482,61 @@ def crawl_fetch_plan(
     """The north rule end-to-end: sitemap discovery → robots.txt rules →
     per-host politeness budgets → priority-queue fetch plan.
 
-    1. :func:`frontier.waves.sitemap_tree_for_homepages` crawls the sitemap
-       forest over ``fetches`` (all its knobs pass through).
-    2. :func:`robots_rules_from_store` re-reads each seed's robots.txt row
-       for Allow/Disallow/Crawl-delay.
+    1. :func:`frontier.waves.prepare_fetches` normalizes ``fetches`` once
+       (3xx chains followed; skipped with ``fetches_prepared=True``), and
+       :func:`frontier.waves.sitemap_tree_for_homepages` crawls the sitemap
+       forest over that store (all its knobs pass through).
+    2. :func:`robots_rules_from_store` reads each seed's robots.txt row of
+       the same prepared store for Allow/Disallow/Crawl-delay, so a
+       redirected robots.txt is read where the crawl landed. Seeds come
+       from the crawl's seed frame (``forest.seeds``); every seed host gets
+       its rules, including hosts whose robots.txt the seen filter skipped,
+       because such a host can still reach a new known-path sitemap.
     3. :func:`robots_filter` drops disallowed page URLs (longest-match,
-       Allow wins ties).
-    4. :func:`fetch_plan_budgeted` ranks survivors per host by
-       (priority desc, lastmod desc, url) and caps each host at its
-       Crawl-delay-derived budget (default for hosts without one).
+       Allow wins ties) and carries each page's host Crawl-delay.
+    4. :func:`frontier.schedule.fetch_plan` ranks survivors per host by
+       (priority desc, lastmod desc, url) at ``default_budget``, then each
+       host is capped at its Crawl-delay-derived budget (the
+       :func:`host_budgets_from_delay` formula; default for hosts without
+       one). The result equals :func:`fetch_plan_budgeted` over
+       :func:`host_budgets_from_delay` of the same rules.
 
     Returns the plan DataFrame (page rows + ``canonical_host``,
-    ``fetch_rank``, ``fetch_budget``).  At 10¹⁰-URL scale every step is a
-    single equi-join or rank-in-partition — no global sort, no driver
+    ``fetch_rank``, ``fetch_budget``).  No Spark job runs after the wave
+    loop: the rules snapshot is consumed once, inside the plan, so every
+    action on the returned plan re-runs the rules kernel (cache or write
+    the plan to read it twice).  At 10¹⁰-URL scale every step is a single
+    equi-join or rank-in-partition — no global sort, no driver
     materialization.
     """
-    from frontier.waves import sitemap_tree_for_homepages
+    from frontier.schedule import fetch_plan
+    from frontier.waves import prepare_fetches, sitemap_tree_for_homepages
+
+    if not crawl_kwargs.get("fetches_prepared"):
+        # the uniqueness hint is an attribute of the caller's frame and
+        # does not survive prepare_fetches: resolve it first
+        if crawl_kwargs.get("store_urls_unique") is None:
+            crawl_kwargs["store_urls_unique"] = getattr(
+                fetches, "_frontier_urls_unique", False
+            )
+        fetches = prepare_fetches(fetches)
+        crawl_kwargs["fetches_prepared"] = True
 
     forest = sitemap_tree_for_homepages(spark, homepages, fetches, **crawl_kwargs)
-    seeds = forest.nodes.filter(F.col("level") == -1).select(
-        F.col("url").alias("seed")
-    )
-    # one row per host, read by both the filter and the budgets: built once
-    # (store join, per-host window, Python rules kernel) instead of per
-    # consumer
-    rules = robots_rules_from_store(seeds, fetches, user_agent).localCheckpoint(
-        eager=True
-    )
-    # the plan reads only the page sink and the rules from here on
+    # the plan reads only the page sink, the seed frame and the store
     forest.unpersist(delete_pages=False)
+    rules = robots_rules_from_store(forest.seeds, fetches, user_agent)
     pages = robots_filter(
         forest.all_pages(),
         rules,
         url_col="page_url",
         broadcast_rules=broadcast_rules,
-    ).drop("robots_crawl_delay")
-    budgets = host_budgets_from_delay(rules, round_seconds, default_budget)
-    return fetch_plan_budgeted(
-        pages, budgets, default_budget, url_col="page_url",
-        salt_buckets=salt_buckets,
+    )
+    # rank at the literal cap (pre-shuffle top-k), then the per-host budget
+    ranked = fetch_plan(pages, default_budget, "page_url", salt_buckets)
+    budget = _delay_budget(F.col("robots_crawl_delay"), round_seconds, default_budget)
+    return (
+        ranked.withColumn("fetch_budget", budget)
+        .filter(F.col("fetch_rank") <= F.col("fetch_budget"))
+        .drop("robots_crawl_delay")
     )

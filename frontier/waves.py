@@ -180,6 +180,9 @@ class SitemapForest:
     nodes: DataFrame
     pages: DataFrame
     wave_metrics: DataFrame | None = None
+    #: the crawl's normalized seed frame, one ``seed`` row per website root
+    #: (the level -1 nodes), readable without assembling ``nodes``
+    seeds: DataFrame | None = None
     #: directory holding the crawl's page parquet files (side-written by the
     #: wave kernel); a temp dir owned by the forest unless the caller gave a
     #: checkpoint_dir (then it lives under it and survives for resume)
@@ -539,10 +542,15 @@ def _resolve_redirects(fetches: DataFrame, max_hops: int = 10) -> DataFrame:
 
 
 #: Per-wave timing telemetry of the most recent crawl on this driver:
-#: one ``{"phase", "wave", "seconds"}`` dict per completed wave, cleared
-#: by :func:`sitemap_tree_for_homepages` at crawl start. Feeds the
-#: depth-stress bench's per-wave fixed-cost measurement; last crawl wins
-#: (benches never run crawls concurrently on one driver).
+#: one ``{"phase", "wave", "seconds", "parse_s", "close_s"}`` dict per
+#: completed wave, cleared by :func:`sitemap_tree_for_homepages` at crawl
+#: start. ``parse_s`` runs up to the frontier close: the scan + parse
+#: snapshot job (wave 0's also holds the seed frontier's close);
+#: ``close_s`` is the close of the next frontier (seen filter, persist,
+#: bucket histogram). A seed close that empties the frontier records one
+#: wave with ``parse_s`` 0. Feeds the depth-stress bench's per-wave
+#: fixed-cost measurement; last crawl wins (benches never run crawls
+#: concurrently on one driver).
 LAST_WAVE_TIMINGS: list[dict] = []
 
 
@@ -726,9 +734,9 @@ class _WaveRunner:
                 "false AS quiet_404",
                 "blocked_reason",
             ).coalesce(small_cap)
-            t_plan = time.perf_counter()
+            t_close = time.perf_counter()
             pending, buckets, pending_rows = self._close(pending)
-            self._record(wave, t0, t_plan, time.perf_counter())
+            self._record(wave, t0, t_close, time.perf_counter())
             if not pending_rows:
                 break
             wave += 1
@@ -736,14 +744,14 @@ class _WaveRunner:
                 break
             t0 = time.perf_counter()
 
-    def _record(self, wave: int, t0: float, t_plan: float, t_end: float) -> None:
+    def _record(self, wave: int, t0: float, t_close: float, t_end: float) -> None:
         LAST_WAVE_TIMINGS.append(
             {
                 "phase": self.phase,
                 "wave": wave,
                 "seconds": round(t_end - t0, 3),
-                "plan_s": round(t_plan - t0, 3),
-                "pending_job_s": round(t_end - t_plan, 3),
+                "parse_s": round(t_close - t0, 3),
+                "close_s": round(t_end - t_close, 3),
             }
         )
 
@@ -977,7 +985,8 @@ def sitemap_tree_for_homepages(
     they simply don't appear in this crawl's forest.
     ``record_seen=True`` appends every sitemap URL this crawl attempted
     (all non-root nodes, 404/invalid included) to the seen table afterwards
-    — call ``seen_set.compact()`` periodically between rounds.
+    (a round that attempted nothing appends nothing) — call
+    ``seen_set.compact()`` periodically between rounds.
     """
     LAST_WAVE_TIMINGS.clear()
     if store_urls_unique is None:
@@ -1124,10 +1133,13 @@ def sitemap_tree_for_homepages(
         F.sum(F.coalesce(F.col("n_pages"), F.lit(0))).alias("n_pages"),
         F.sum(F.when(F.col("rec") == "child", 1).otherwise(0)).alias("n_children"),
     )
-    if seen_set is not None and record_seen:
+    if seen_set is not None and record_seen and (
+        runner_a.wave_outputs or runner_b.wave_outputs
+    ):
         # every sitemap URL this crawl attempted (404/invalid included) —
         # the set a later round must not re-fetch; roots (level -1) are
-        # synthetic, never fetched
+        # synthetic, never fetched. A round without wave output attempted
+        # nothing: appending would only write an empty part file
         seen_set.record_seen(
             forest.nodes.filter(F.col("level") >= 0).select("url")
         )
@@ -1196,6 +1208,7 @@ def _assemble(
     return SitemapForest(
         nodes=all_nodes,
         pages=pages,
+        seeds=seeds,
         pages_dir=pages_root,
         _owns_pages_dir=owns_pages,
     )

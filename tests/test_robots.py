@@ -367,6 +367,95 @@ def test_crawl_fetch_plan_end_to_end(spark):
     plan.unpersist()
 
 
+def _composed_plan(spark, homepages, corpus, salt_buckets, **crawl_kwargs):
+    """crawl_fetch_plan as the separate public steps: rules from the
+    forest's level -1 nodes, filter, budgets table, budgeted plan."""
+    from frontier.robots import robots_rules_from_store
+    from frontier.waves import sitemap_tree_for_homepages
+
+    forest = sitemap_tree_for_homepages(spark, homepages, corpus, **crawl_kwargs)
+    seeds = forest.nodes.filter(F.col("level") == -1).select(
+        F.col("url").alias("seed")
+    )
+    rules = robots_rules_from_store(seeds, corpus)
+    pages = robots_filter(
+        forest.all_pages(), rules, url_col="page_url", broadcast_rules=True
+    ).drop("robots_crawl_delay")
+    budgets = host_budgets_from_delay(rules, 20.0, default_budget=8)
+    plan = fetch_plan_budgeted(
+        pages, budgets, 8, url_col="page_url", salt_buckets=salt_buckets
+    )
+    return plan, forest
+
+
+@pytest.mark.parametrize("salt_buckets", [0, 4])
+@pytest.mark.parametrize("seed_kind", ["list", "frame"])
+def test_crawl_fetch_plan_equals_composed_steps(spark, salt_buckets, seed_kind):
+    """crawl_fetch_plan (rules consumed once inside the plan) equals the
+    composition of its public steps row for row and in column order, for a
+    seed list and for a seeds DataFrame. The budgets bind below the cap on
+    some hosts (Crawl-delay 1 + h % 5 over a 20 s round → 8, 8, 6, 5)."""
+    from frontier.robots import crawl_fetch_plan
+    from frontier.synth import synth_crawl_corpus
+
+    corpus = synth_crawl_corpus(
+        spark, 4, leaves_per_host=2, pages_per_leaf=20, robots_rules=True
+    )
+    seeds = [f"http://host{i}.example.com/" for i in range(4)]
+    homepages = (
+        seeds if seed_kind == "list"
+        else spark.createDataFrame([(s,) for s in seeds], "seed string")
+    )
+    got = crawl_fetch_plan(
+        spark, homepages, corpus, round_seconds=20.0, default_budget=8,
+        salt_buckets=salt_buckets, use_known_paths=False,
+    )
+    want, forest = _composed_plan(
+        spark, homepages, corpus, salt_buckets, use_known_paths=False
+    )
+    assert got.schema == want.schema
+    got_rows = sorted(got.collect())
+    assert got_rows == sorted(want.collect())
+    budgets = {r["canonical_host"]: r["fetch_budget"] for r in got_rows}
+    assert budgets == {
+        f"host{i}.example.com": b for i, b in enumerate((8, 8, 6, 5))
+    }
+    forest.unpersist()
+
+
+def test_crawl_fetch_plan_reads_redirected_robots(spark):
+    """A robots.txt that 301-redirects is followed by the crawl (its
+    Sitemap: line is read) and its rules must apply too: the plan drops
+    the Disallowed page."""
+    from frontier.robots import crawl_fetch_plan
+
+    robots = (
+        b"User-agent: *\nDisallow: /private/\n"
+        b"Sitemap: http://a.com/sitemap.xml\n"
+    )
+    urlset = (
+        b'<?xml version="1.0" encoding="UTF-8"?>'
+        b'<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+        b"<url><loc>http://a.com/page.html</loc></url>"
+        b"<url><loc>http://a.com/private/x.html</loc></url>"
+        b"</urlset>"
+    )
+    store = spark.createDataFrame(
+        [
+            ("http://a.com/robots.txt", "https://a.com/robots.txt", 301,
+             None, None),
+            ("https://a.com/robots.txt", None, 200, "text/plain",
+             bytearray(robots)),
+            ("http://a.com/sitemap.xml", None, 200, "application/xml",
+             bytearray(urlset)),
+        ],
+        "url string, final_url string, status int, content_type string, "
+        "body binary",
+    )
+    plan = crawl_fetch_plan(spark, ["http://a.com/"], store, use_known_paths=False)
+    assert [r["page_url"] for r in plan.collect()] == ["http://a.com/page.html"]
+
+
 def test_empty_user_agent_value_matches_nothing():
     """Review-caught: '' is a substring of every token; an empty
     'User-agent:' line must not hijack selection from the '*' group."""

@@ -131,6 +131,8 @@ def test_filter_unseen_sharded_10m_keys(spark):
     out are exactly the unseen ones."""
     from frontier.dedup import build_bloom_shards, make_member_filter
 
+    jsc = spark.sparkContext._jsc
+    n_persisted = jsc.getPersistentRDDs().size()
     n_seen = 10_000_000
     seen = spark.range(n_seen).selectExpr(
         "concat('http://h', CAST(id % 100000 AS STRING), '.com/p', "
@@ -142,14 +144,17 @@ def test_filter_unseen_sharded_10m_keys(spark):
         "CAST(id * 97 + (id % 2) * 30000000 AS STRING)) AS url"
     ).distinct()
 
-    got = make_member_filter(
-        seen, expected_keys=n_seen, fpp=0.03, n_shards=8
-    )(candidates)
+    member = make_member_filter(seen, expected_keys=n_seen, fpp=0.03, n_shards=8)
+    got = member(candidates)
     want = candidates.join(seen, "url", "left_semi")
     n_seen_candidates = want.count()
     assert n_seen_candidates > 0
     assert got.count() == n_seen_candidates
     assert got.join(want, "url", "left_anti").isEmpty()
+    # the shard bitmaps stay persisted until the filter is released
+    assert jsc.getPersistentRDDs().size() > n_persisted
+    member.release()
+    assert jsc.getPersistentRDDs().size() == n_persisted
 
     # shard layout sanity: 8 bitmaps, none empty at this fill
     shards = build_bloom_shards(seen, "url", n_seen, 0.03, 8).collect()
@@ -242,6 +247,7 @@ def test_member_filter_exactness_broadcast_and_sharded(spark):
         )
         got = sorted((r.url, r.payload) for r in member(candidates).collect())
         assert got == want, f"n_shards={shards}"
+        member.release()
 
     # the tight bloom must fire false positives on this input, or the
     # semi-join confirm was never exercised

@@ -3,6 +3,8 @@ re-fetch of already-seen sitemap URLs across seeds / crawl rounds)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from frontier.datapipe import REGISTRY
@@ -83,6 +85,61 @@ def test_second_crawl_skips_everything(spark, tmp_path):
     assert second.nodes.filter(F.col("level") >= 0).count() == 0
     assert second.nodes.count() == 2  # the website roots
     first.unpersist(), second.unpersist()
+
+
+def _listing(path):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def test_fully_seen_round_appends_nothing(spark, tmp_path):
+    """A round that attempted nothing (every seed robots.txt seen, no
+    known-path phase) leaves the seen table's files as they were: no
+    empty part file is appended."""
+    corpus = synth_crawl_corpus(spark, 2, leaves_per_host=2, pages_per_leaf=5)
+    base = str(tmp_path / "seen")
+    seen = UrlSeenSet(spark, base, expected_urls=4096)
+    first = _crawl(spark, corpus, 2, seen_set=seen, record_seen=True)
+    before = _listing(base)
+    assert before
+    second = _crawl(spark, corpus, 2, seen_set=seen, record_seen=True)
+    assert second.pages.count() == 0
+    assert _listing(base) == before
+    first.unpersist(), second.unpersist()
+
+
+def test_seen_robots_still_rules_a_new_known_path(spark, tmp_path):
+    """Rules cover every seed host, not only hosts whose robots.txt the
+    round fetched: with robots.txt already seen, the known-path
+    /sitemap.xml is new, and its pages must still obey the host's
+    Disallow."""
+    from frontier.robots import crawl_fetch_plan
+
+    urlset = (
+        b'<?xml version="1.0" encoding="UTF-8"?>'
+        b'<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
+        b"<url><loc>http://a.com/page.html</loc></url>"
+        b"<url><loc>http://a.com/private/x.html</loc></url>"
+        b"</urlset>"
+    )
+    store = spark.createDataFrame(
+        [
+            ("http://a.com/robots.txt", 200, "text/plain",
+             bytearray(b"User-agent: *\nDisallow: /private/\n")),
+            ("http://a.com/sitemap.xml", 200, "application/xml",
+             bytearray(urlset)),
+        ],
+        "url string, status int, content_type string, body binary",
+    )
+    seen = UrlSeenSet(spark, str(tmp_path / "seen"), expected_urls=64)
+    seen.record_seen(
+        spark.createDataFrame([("http://a.com/robots.txt",)], "url string")
+    )
+    plan = crawl_fetch_plan(spark, ["http://a.com/"], store, seen_set=seen)
+    assert [r["page_url"] for r in plan.collect()] == ["http://a.com/page.html"]
 
 
 def test_partial_seen_skips_only_that_subtree(spark, tmp_path):

@@ -307,6 +307,10 @@ def test_deep_chain_crawls_to_recursion_ceiling(spark):
     assert forest.all_pages().count() == 2 * 10 * 3  # nothing blocked
     assert len(LAST_WAVE_TIMINGS) == 12
     assert all(t["seconds"] > 0 for t in LAST_WAVE_TIMINGS)
+    assert all(
+        t["parse_s"] + t["close_s"] <= t["seconds"] + 0.002
+        for t in LAST_WAVE_TIMINGS
+    )
 
     corpus11 = synth_deep_corpus(spark, 2, chain_depth=11, pages_per_leaf=3)
     forest11 = sitemap_tree_for_homepages(
