@@ -1,11 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship crawl (reference ``sitemap_tree_for_homepage``,
-usp/tree.py:42-130, re-expressed as DataFrame waves). ``queries`` exposes each
-implemented operator from SURVEY.md §2 plus the training-data pipeline ops;
-``oracle_sql`` carries the DuckDB-equivalent SQL for everything — including
-the crawl surface (constructive oracles: the flagship golden tree is pinned
-as VALUES against the reference's own expected rows,
+usp/tree.py:42-130, re-expressed as DataFrame waves). ``queries`` and
+``oracle_sql`` read one table, ``frontier.datapipe.REGISTRY``: the
+training-data pipeline ops register there, and this module registers the
+crawl surface, the media codecs and the WARC kernels the same way, each
+with its DuckDB-equivalent SQL (constructive oracles: the flagship golden
+tree is pinned as VALUES against the reference's own expected rows,
 /root/reference/tests/tree/test_basic.py:122-133; the multi-host crawl and
 the media operators are derived in closed form from their deterministic
 synthesized inputs).
@@ -16,20 +17,53 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from frontier.datapipe import REGISTRY
+from frontier.datapipe import REGISTRY, QueryDef, _register
+from frontier.multimodal import (
+    audio_pcm_stats,
+    extract_audio_metadata,
+    extract_media_features,
+    extract_media_metadata,
+    extract_mp3_metadata,
+    extract_ogg_metadata,
+    flac_pcm_stats,
+    gif_animation_stats,
+    image_dhash,
+    image_pixel_stats,
+    resize_image_real,
+    resize_images,
+    sample_video_frames,
+    video_frame_stats,
+)
+from frontier.robots import crawl_fetch_plan
 from frontier.synth import (
     TEST_BASE_URL,
     reference_site_fetches,
-    synth_crawl_corpus,
     synth_audio_payloads,
-    synth_mp3_payloads,
+    synth_avi_mjpeg_payloads,
+    synth_bmp_neardup_payloads,
+    synth_bmp_pixel_payloads,
+    synth_crawl_corpus,
+    synth_flac_payloads,
+    synth_gif_animation_payloads,
+    synth_gif_pixel_payloads,
+    synth_jpeg_block_payloads,
+    synth_jpeg_color_payloads,
+    synth_jpeg_progressive_payloads,
     synth_media_payloads,
+    synth_mp3_payloads,
+    synth_ogg_payloads,
+    synth_pcm_payloads,
+    synth_png_pixel_payloads,
+    synth_tiff_pixel_payloads,
+    synth_warc_segments,
 )
+from frontier.warc import warc_records
 from frontier.waves import sitemap_tree_for_homepages
 
 _PAGE_COLS = [
@@ -99,13 +133,13 @@ SELECT * FROM (VALUES
    '0.50', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR))
 ) t(seed, sitemap_url, page_url, priority, last_modified, change_frequency)
 """
+_register(
+    "flagship_tree",
+    QueryDef(build=_flagship_gate, oracle=_FLAGSHIP_ORACLE),
+)
 
 
 def _frontier_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-host crawl over the deterministic synthetic corpus
-    (synth_crawl_corpus(8, 2, 25): robots → index → leaf urlsets per host);
-    the oracle reconstructs the expected 400-page set in closed form from
-    the generator's host×leaf×page grid."""
     n_hosts = 8
     corpus = synth_crawl_corpus(spark, n_hosts, leaves_per_host=2, pages_per_leaf=25)
     seeds = [f"http://host{i}.example.com/" for i in range(n_hosts)]
@@ -137,16 +171,20 @@ SELECT
     AS change_frequency
 FROM grid
 """
+_register(
+    "frontier_crawl",
+    QueryDef(
+        build=_frontier_crawl,
+        oracle=_CRAWL_ORACLE,
+        doc="""Multi-host crawl over the deterministic synthetic corpus
+        (synth_crawl_corpus(8, 2, 25): robots → index → leaf urlsets per host);
+        the oracle reconstructs the expected 400-page set in closed form from
+        the generator's host×leaf×page grid.""",
+    ),
+)
 
 
 def _frontier_fetch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The north rule end-to-end: sitemap discovery → RFC 9309 robots rules
-    → Crawl-delay budgets → salted priority-queue fetch plan
-    (frontier.robots.crawl_fetch_plan) over synth_crawl_corpus(8, 2, 25,
-    robots_rules=True); the oracle reconstructs the plan in closed form
-    from the generator grid + rule semantics."""
-    from frontier.robots import crawl_fetch_plan
-
     n_hosts = 8
     corpus = synth_crawl_corpus(
         spark, n_hosts, leaves_per_host=2, pages_per_leaf=25, robots_rules=True
@@ -197,15 +235,36 @@ FROM ranked
 WHERE fetch_rank <= fetch_budget
 ORDER BY canonical_host, fetch_rank
 """
+_register(
+    "frontier_fetch_plan",
+    QueryDef(
+        build=_frontier_fetch_plan,
+        oracle=_FETCH_PLAN_ORACLE,
+        doc="""The north rule end-to-end: sitemap discovery → RFC 9309 robots rules
+        → Crawl-delay budgets → salted priority-queue fetch plan
+        (frontier.robots.crawl_fetch_plan) over synth_crawl_corpus(8, 2, 25,
+        robots_rules=True); the oracle reconstructs the plan in closed form
+        from the generator grid + rule semantics.""",
+    ),
+)
+
+
+def _decoded(
+    op: Callable[[DataFrame], DataFrame],
+    synth: Callable[[DataFrame], DataFrame],
+    *keys: str,
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Builder of a decode-kernel query: synthesize closed-form payloads
+    from ``documents``, run the kernel ``op`` over them, order by ``keys``."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        return op(synth(docs)).orderBy(*keys)
+
+    return build
 
 
 def _media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-header parsing (PNG IHDR / GIF screen descriptor / BMP DIB
-    / JPEG SOF) over spec-correct synthesized image payloads; the oracle
-    derives the expected format/dims/sizes in closed form from the
-    synth_media_payloads contract."""
-    from frontier.multimodal import extract_media_metadata
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     media = synth_media_payloads(docs)
     return (
@@ -230,20 +289,17 @@ SELECT doc_id,
 FROM documents
 ORDER BY doc_id
 """
-
-
-def _media_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WAV header parsing (RIFF chunk walk: channels / sample rate /
-    bit depth / sample count -> duration) over spec-correct synthesized PCM
-    WAV payloads; the oracle derives every field in closed form from the
-    synth_audio_payloads contract."""
-    from frontier.multimodal import extract_audio_metadata
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        extract_audio_metadata(synth_audio_payloads(docs))
-        .orderBy("doc_id")
-    )
+_register(
+    "media_metadata",
+    QueryDef(
+        build=_media_metadata,
+        oracle=_MEDIA_META_ORACLE,
+        doc="""REAL image-header parsing (PNG IHDR / GIF screen descriptor / BMP DIB
+        / JPEG SOF) over spec-correct synthesized image payloads; the oracle
+        derives the expected format/dims/sizes in closed form from the
+        synth_media_payloads contract.""",
+    ),
+)
 
 
 # synth_audio_payloads: channels = 1 + doc_id%2, rate =
@@ -271,17 +327,17 @@ SELECT doc_id,
 FROM d
 ORDER BY doc_id
 """
-
-
-def _media_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer III frame-header parsing (ID3v2 skip + spec
-    bitrate/sample-rate tables) over spec-correct synthesized payloads;
-    the oracle re-derives every field from the synth_mp3_payloads
-    contract and the same spec tables."""
-    from frontier.multimodal import extract_mp3_metadata
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return extract_mp3_metadata(synth_mp3_payloads(docs)).orderBy("doc_id")
+_register(
+    "media_audio_metadata",
+    QueryDef(
+        build=_decoded(extract_audio_metadata, synth_audio_payloads, "doc_id"),
+        oracle=_MEDIA_AUDIO_ORACLE,
+        doc="""REAL WAV header parsing (RIFF chunk walk: channels / sample rate /
+        bit depth / sample count -> duration) over spec-correct synthesized PCM
+        WAV payloads; the oracle derives every field in closed form from the
+        synth_audio_payloads contract.""",
+    ),
+)
 
 
 # synth_mp3_payloads: bitrate_idx = 1 + doc_id%14, rate_idx = doc_id%3,
@@ -298,6 +354,17 @@ SELECT doc_id,
 FROM documents
 ORDER BY doc_id
 """
+_register(
+    "media_mp3_metadata",
+    QueryDef(
+        build=_decoded(extract_mp3_metadata, synth_mp3_payloads, "doc_id"),
+        oracle=_MEDIA_MP3_ORACLE,
+        doc="""REAL MPEG-1 Layer III frame-header parsing (ID3v2 skip + spec
+        bitrate/sample-rate tables) over spec-correct synthesized payloads;
+        the oracle re-derives every field from the synth_mp3_payloads
+        contract and the same spec tables.""",
+    ),
+)
 
 
 def _media_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,11 +373,6 @@ def _media_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image resize plumbing (stub transform, a pure function of
-    sha256(payload) + target dims — the oracle recomputes the resized
-    payload's sha256 from sha256(text) alone)."""
-    from frontier.multimodal import resize_images
-
     out = resize_images(_media_payloads(spark, sf_dir), 224, 224)
     return out.select(
         "doc_id", "width", "height", F.sha2("payload", 256).alias("payload_sha")
@@ -329,14 +391,19 @@ SELECT doc_id,
 FROM documents
 ORDER BY doc_id
 """
+_register(
+    "media_resize",
+    QueryDef(
+        build=_media_resize,
+        oracle=_MEDIA_RESIZE_ORACLE,
+        doc="""Image resize plumbing (stub transform, a pure function of
+        sha256(payload) + target dims — the oracle recomputes the resized
+        payload's sha256 from sha256(text) alone).""",
+    ),
+)
 
 
 def _media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame sampling plumbing (stub sampler; frame count and frame
-    payloads are pure functions of sha256(payload), re-derived by the
-    oracle)."""
-    from frontier.multimodal import sample_video_frames
-
     out = sample_video_frames(_media_payloads(spark, sf_dir), every_n=2)
     return out.select("doc_id", "frame_idx", "frame_sha256").orderBy(
         "doc_id", "frame_idx"
@@ -362,24 +429,16 @@ SELECT doc_id,
 FROM expanded
 ORDER BY doc_id, frame_idx
 """
-
-
-def _media_avi_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame extraction: AVI/MJPEG RIFF container walk (LIST
-    recursion, even padding, '##dc' chunks in stream order) + every-2nd
-    sampling + the REAL baseline JPEG decode of each sampled frame, over
-    containers whose frames are DCT-exact closed-form grids — mis-framed
-    chunks, wrong stride, or a dropped frame all land on different
-    levels. Replaces the former frame-sampling stub for the AVI path
-    (codec formats keep the deterministic stub with that honest scope
-    stated)."""
-    from frontier.multimodal import video_frame_stats
-    from frontier.synth import synth_avi_mjpeg_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return video_frame_stats(
-        synth_avi_mjpeg_payloads(docs), every_n=2
-    ).orderBy("doc_id", "frame_no")
+_register(
+    "media_frames",
+    QueryDef(
+        build=_media_frames,
+        oracle=_MEDIA_FRAMES_ORACLE,
+        doc="""Video frame sampling plumbing (stub sampler; frame count and frame
+        payloads are pure functions of sha256(payload), re-derived by the
+        oracle).""",
+    ),
+)
 
 
 # synth_avi_mjpeg_payloads: nf = 1 + doc%5, bx = 1 + doc%2, by = 1 + doc%3,
@@ -416,6 +475,26 @@ FROM blk
 GROUP BY doc_id, f, bx, by
 ORDER BY doc_id, frame_no
 """
+_register(
+    "media_avi_frame_stats",
+    QueryDef(
+        build=_decoded(
+            partial(video_frame_stats, every_n=2),
+            synth_avi_mjpeg_payloads,
+            "doc_id",
+            "frame_no",
+        ),
+        oracle=_MEDIA_AVI_FRAMES_ORACLE,
+        doc="""REAL video frame extraction: AVI/MJPEG RIFF container walk (LIST
+        recursion, even padding, '##dc' chunks in stream order) + every-2nd
+        sampling + the REAL baseline JPEG decode of each sampled frame, over
+        containers whose frames are DCT-exact closed-form grids — mis-framed
+        chunks, wrong stride, or a dropped frame all land on different
+        levels. Replaces the former frame-sampling stub for the AVI path
+        (codec formats keep the deterministic stub with that honest scope
+        stated).""",
+    ),
+)
 
 
 def _mixed_media_column(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,15 +504,6 @@ def _mixed_media_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade, per-format closed-form pixels. TIFF (round-5) carries the
     same pixel formula as BMP/PNG through a third container walk (IFD
     tags, strip framing, PackBits, both byte orders)."""
-    from frontier.synth import (
-        synth_bmp_pixel_payloads,
-        synth_gif_pixel_payloads,
-        synth_jpeg_block_payloads,
-        synth_jpeg_color_payloads,
-        synth_png_pixel_payloads,
-        synth_tiff_pixel_payloads,
-    )
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
         synth_bmp_pixel_payloads(docs.filter("doc_id % 6 = 0"))
@@ -445,19 +515,11 @@ def _mixed_media_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL content-derived media features: the six-format mixed media
-    column (BMP/PNG/GIF/grayscale JPEG/color JPEG/TIFF) through the full
-    decode cascade into embed_image_content — grayscale 4×4 grid of
-    floor-mean intensities, components m/1024 (exact dyadic rationals).
-    The oracle re-derives every grid cell from the per-format closed-form
-    pixel values, so a flipped image, misrouted dispatch, or any decoder
-    defect changes sq_norm / the index-weighted idx_dot (which pins cell
-    ORDER — a transposed or mirrored grid cannot match)."""
-    from frontier.multimodal import extract_media_features
-
-    out = extract_media_features(_mixed_media_column(spark, sf_dir), dim=16)
-    return out.select(
+def _embedding_moments(media: DataFrame) -> DataFrame:
+    """16-dim content embeddings of ``media`` reduced to two exact
+    moments: sq_norm and the index-weighted idx_dot (which pins component
+    ORDER — a permuted embedding cannot match)."""
+    return extract_media_features(media, dim=16).select(
         "doc_id",
         F.expr(
             "aggregate(embedding, CAST(0.0 AS DOUBLE),"
@@ -468,7 +530,13 @@ def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             " (v, i) -> CAST(v AS DOUBLE) * CAST(i AS DOUBLE)),"
             " CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
         ).alias("idx_dot"),
-    ).orderBy("doc_id")
+    )
+
+
+def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _embedding_moments(_mixed_media_column(spark, sf_dir)).orderBy(
+        "doc_id"
+    )
 
 
 # Per-format per-pixel gray (r+g+b) in closed form, 4×4 grid floor-means
@@ -569,19 +637,24 @@ FROM m
 GROUP BY doc_id
 ORDER BY doc_id
 """
+_register(
+    "media_features",
+    QueryDef(
+        build=_media_features,
+        oracle=_MEDIA_FEATURES_ORACLE,
+        doc="""REAL content-derived media features: the six-format mixed media
+        column (BMP/PNG/GIF/grayscale JPEG/color JPEG/TIFF) through the full
+        decode cascade into embed_image_content — grayscale 4×4 grid of
+        floor-mean intensities, components m/1024 (exact dyadic rationals).
+        The oracle re-derives every grid cell from the per-format closed-form
+        pixel values, so a flipped image, misrouted dispatch, or any decoder
+        defect changes sq_norm / the index-weighted idx_dot (which pins cell
+        ORDER — a transposed or mirrored grid cannot match).""",
+    ),
+)
 
 
 def _warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC segment ingest (the Common-Crawl container format): documents
-    → spec-correct synthesized .warc / .warc.gz segments
-    (frontier.synth.synth_warc_segments) → Content-Length-framed record
-    walk (frontier.warc.warc_records, shuffle-free mapInPandas) → the
-    north-rule page-table projection.  The oracle re-derives every field
-    in closed form from the synth contract — including bodies that embed
-    the "WARC/1.0" banner, which only framing-correct parsing survives."""
-    from frontier.synth import synth_warc_segments
-    from frontier.warc import warc_records
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     recs = warc_records(synth_warc_segments(docs), responses_only=True)
     return recs.select(
@@ -630,6 +703,20 @@ SELECT 'http://host' || CAST(doc_id % 50 AS VARCHAR)
 FROM b
 ORDER BY url
 """
+_register(
+    "warc_ingest",
+    QueryDef(
+        build=_warc_ingest,
+        oracle=_WARC_INGEST_ORACLE,
+        doc="""WARC segment ingest (the Common-Crawl container format): documents
+        → spec-correct synthesized .warc / .warc.gz segments
+        (frontier.synth.synth_warc_segments) → Content-Length-framed record
+        walk (frontier.warc.warc_records, shuffle-free mapInPandas) → the
+        north-rule page-table projection.  The oracle re-derives every field
+        in closed form from the synth contract — including bodies that embed
+        the "WARC/1.0" banner, which only framing-correct parsing survives.""",
+    ),
+)
 
 
 # WARC → CDX index writing: the missing link between segment ingest
@@ -642,9 +729,6 @@ ORDER BY url
 # same shuffle-free mapInPandas scan as warc_ingest; the only exchange is
 # the range sort that the index format itself demands.
 def _warc_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from frontier.synth import synth_warc_segments
-    from frontier.warc import warc_records
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     recs = warc_records(synth_warc_segments(docs), responses_only=True)
     recs.createOrReplaceTempView("cdx_recs")
@@ -693,6 +777,10 @@ SELECT 'com,example,host' || CAST(doc_id % 50 AS VARCHAR)
 FROM b
 ORDER BY surt, ts14
 """
+_register(
+    "warc_cdx_index",
+    QueryDef(build=_warc_cdx_index, oracle=_WARC_CDX_ORACLE),
+)
 
 
 # Engine-shared revisit classification: first capture of each payload
@@ -724,18 +812,6 @@ ORDER BY url
 
 
 def _warc_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC revisit-record dedup (ISO 28500 §6.7.2 revisit /
-    identical-payload-digest — how Common Crawl stores recrawls): a
-    recrawl pass re-captures every 6th document at a shifted id (different
-    URL + later capture time, same text), segments are built and re-parsed
-    through the real WARC walk, and captures sharing a payload digest
-    collapse to one `response` + N `revisit` records pointing at it. The
-    planted WARC/1.0 banner (doc_id % 7) makes some mirrors genuinely
-    NON-duplicate — banner membership differs after the id shift — so the
-    query must classify by actual payload bytes, not by provenance."""
-    from frontier.synth import synth_warc_segments
-    from frontier.warc import warc_records
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = docs.select("doc_id", "text")
     mirrors = (
@@ -780,19 +856,22 @@ warc_caps AS (
     FROM b
 )
 """ + _WARC_REVISIT_SQL
-
-
-def _media_bmp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel decode (no image library: uncompressed 24-bit BMP —
-    bottom-up rows, 4-byte padding, BGR) over BMPs whose every pixel is
-    closed-form; the oracle recomputes channel sums AND x/y first moments
-    from the formula, so a decoder that mishandles orientation or padding
-    cannot match (sums alone would be flip-invariant)."""
-    from frontier.multimodal import image_pixel_stats
-    from frontier.synth import synth_bmp_pixel_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_pixel_stats(synth_bmp_pixel_payloads(docs)).orderBy("doc_id")
+_register(
+    "warc_dedup_digest",
+    QueryDef(
+        build=_warc_dedup_digest,
+        oracle=_WARC_DEDUP_ORACLE,
+        doc="""WARC revisit-record dedup (ISO 28500 §6.7.2 revisit /
+        identical-payload-digest — how Common Crawl stores recrawls): a
+        recrawl pass re-captures every 6th document at a shifted id (different
+        URL + later capture time, same text), segments are built and re-parsed
+        through the real WARC walk, and captures sharing a payload digest
+        collapse to one `response` + N `revisit` records pointing at it. The
+        planted WARC/1.0 banner (doc_id % 7) makes some mirrors genuinely
+        NON-duplicate — banner membership differs after the id shift — so the
+        query must classify by actual payload bytes, not by provenance.""",
+    ),
+)
 
 
 # synth_bmp_pixel_payloads: w = 4 + doc%5, h = 3 + doc%4,
@@ -822,17 +901,21 @@ FROM px
 GROUP BY doc_id, w, h
 ORDER BY doc_id
 """
+_register(
+    "media_bmp_pixel_stats",
+    QueryDef(
+        build=_decoded(image_pixel_stats, synth_bmp_pixel_payloads, "doc_id"),
+        oracle=_MEDIA_BMP_PIXEL_ORACLE,
+        doc="""REAL pixel decode (no image library: uncompressed 24-bit BMP —
+        bottom-up rows, 4-byte padding, BGR) over BMPs whose every pixel is
+        closed-form; the oracle recomputes channel sums AND x/y first moments
+        from the formula, so a decoder that mishandles orientation or padding
+        cannot match (sums alone would be flip-invariant).""",
+    ),
+)
 
 
 def _media_bmp_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL resize: decode the closed-form BMPs, nearest-neighbor resample
-    to 4x3 (src = (dst*src_dim)//dst_dim), re-encode as real BMPs, decode
-    AGAIN, and emit the resized pixel statistics — the oracle recomputes
-    which source pixels the floor mapping selects, so the whole
-    decode→resize→encode→decode chain must be bit-right."""
-    from frontier.multimodal import image_pixel_stats, resize_images, resize_image_real
-    from frontier.synth import synth_bmp_pixel_payloads
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     resized = resize_images(
         synth_bmp_pixel_payloads(docs), 4, 3, resize=resize_image_real
@@ -869,31 +952,33 @@ FROM vals
 GROUP BY doc_id
 ORDER BY doc_id
 """
+_register(
+    "media_bmp_resize_real",
+    QueryDef(
+        build=_media_bmp_resize_real,
+        oracle=_MEDIA_BMP_RESIZE_ORACLE,
+        doc="""REAL resize: decode the closed-form BMPs, nearest-neighbor resample
+        to 4x3 (src = (dst*src_dim)//dst_dim), re-encode as real BMPs, decode
+        AGAIN, and emit the resized pixel statistics — the oracle recomputes
+        which source pixels the floor mapping selects, so the whole
+        decode→resize→encode→decode chain must be bit-right.""",
+    ),
+)
 
 
-def _media_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG pixel decode (stdlib zlib inflate + inversion of all five
-    scanline filters — the synth cycles the filter type per row, so
-    None/Sub/Up/Average/Paeth all fire) over PNGs carrying the same
-    closed-form pixel grid as the BMP query; same formula-derived oracle,
-    entirely different decode path proving against it."""
-    from frontier.multimodal import image_pixel_stats
-    from frontier.synth import synth_png_pixel_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_pixel_stats(synth_png_pixel_payloads(docs)).orderBy("doc_id")
-
-
-def _media_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF pixel decode — hand-rolled variable-width LZW (dictionary
-    growth, Clear/End, sub-block reassembly) + palette mapping — over GIFs
-    whose index grid and palette are closed-form; the oracle recomputes the
-    palette-mapped channel values per pixel."""
-    from frontier.multimodal import image_pixel_stats
-    from frontier.synth import synth_gif_pixel_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_pixel_stats(synth_gif_pixel_payloads(docs)).orderBy("doc_id")
+_register(
+    "media_png_pixel_stats",
+    QueryDef(
+        build=_decoded(image_pixel_stats, synth_png_pixel_payloads, "doc_id"),
+        # same formula-derived expectation; the PNG decode path must match it
+        oracle=_MEDIA_BMP_PIXEL_ORACLE,
+        doc="""REAL PNG pixel decode (stdlib zlib inflate + inversion of all five
+        scanline filters — the synth cycles the filter type per row, so
+        None/Sub/Up/Average/Paeth all fire) over PNGs carrying the same
+        closed-form pixel grid as the BMP query; same formula-derived oracle,
+        entirely different decode path proving against it.""",
+    ),
+)
 
 
 # synth_gif_pixel_payloads: idx(x,y) = (doc*31 + y*7 + x*3) % 256,
@@ -926,34 +1011,17 @@ FROM vals
 GROUP BY doc_id, w, h
 ORDER BY doc_id
 """
-
-
-def _media_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline JPEG decode — DHT canonical-Huffman parsing, byte
-    unstuffing, DC sign extension, dequant, orthonormal 2D IDCT — over
-    grayscale JPEGs built from DCT-exact constant blocks (DC-only, even
-    levels divide the q=16 table), so the lossy format becomes closed-form
-    checkable; per-block sums/moments re-derived in SQL."""
-    from frontier.multimodal import image_pixel_stats
-    from frontier.synth import synth_jpeg_block_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_pixel_stats(synth_jpeg_block_payloads(docs)).orderBy("doc_id")
-
-
-def _media_jpeg_color_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline COLOR JPEG decode — interleaved-MCU entropy decode
-    across 3 components (Y 2x2 + Cb/Cr 1x1), per-component quant/Huffman
-    table selection, 4:2:0 chroma upsampling, and the JFIF YCbCr→RGB
-    floor(x+0.5) transform — over DCT-exact constant-block color JPEGs;
-    the oracle recomputes the per-block RGB in closed form, so a wrong MCU
-    order, predictor mix-up, table swap, or off-by-one in the upsample
-    grid all break the hash."""
-    from frontier.multimodal import image_pixel_stats
-    from frontier.synth import synth_jpeg_color_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_pixel_stats(synth_jpeg_color_payloads(docs)).orderBy("doc_id")
+_register(
+    "media_gif_pixel_stats",
+    QueryDef(
+        build=_decoded(image_pixel_stats, synth_gif_pixel_payloads, "doc_id"),
+        oracle=_MEDIA_GIF_PIXEL_ORACLE,
+        doc="""REAL GIF pixel decode — hand-rolled variable-width LZW (dictionary
+        growth, Clear/End, sub-block reassembly) + palette mapping — over GIFs
+        whose index grid and palette are closed-form; the oracle recomputes the
+        palette-mapped channel values per pixel.""",
+    ),
+)
 
 
 # synth_jpeg_color_payloads: mbx = 1 + doc%2, mby = 1 + doc%3; per 8x8
@@ -1001,26 +1069,38 @@ FROM px
 GROUP BY doc_id, mbx, mby
 ORDER BY doc_id
 """
-
-
-def _media_jpeg_progressive_pixel_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """REAL PROGRESSIVE JPEG decode (SOF2): eight successive-approximation
-    scans — interleaved DC first (Al=1), per-component AC first scans with
-    EOBn band runs, per-component AC refinements, and the DC refinement
-    bit scan — accumulated into coefficient arrays and only then
-    dequantized/IDCT'd. Same closed-form levels (and hence the SAME
-    oracle) as media_jpeg_color_pixel_stats: only the container differs,
-    so any defect in spectral selection, band runs, refinement bits, or
-    scan ordering breaks the hash."""
-    from frontier.multimodal import image_pixel_stats
-    from frontier.synth import synth_jpeg_progressive_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_pixel_stats(
-        synth_jpeg_progressive_payloads(docs)
-    ).orderBy("doc_id")
+_register(
+    "media_jpeg_color_pixel_stats",
+    QueryDef(
+        build=_decoded(image_pixel_stats, synth_jpeg_color_payloads, "doc_id"),
+        oracle=_MEDIA_JPEG_COLOR_PIXEL_ORACLE,
+        doc="""REAL baseline COLOR JPEG decode — interleaved-MCU entropy decode
+        across 3 components (Y 2x2 + Cb/Cr 1x1), per-component quant/Huffman
+        table selection, 4:2:0 chroma upsampling, and the JFIF YCbCr→RGB
+        floor(x+0.5) transform — over DCT-exact constant-block color JPEGs;
+        the oracle recomputes the per-block RGB in closed form, so a wrong MCU
+        order, predictor mix-up, table swap, or off-by-one in the upsample
+        grid all break the hash.""",
+    ),
+)
+_register(
+    "media_jpeg_progressive_pixel_stats",
+    QueryDef(
+        build=_decoded(
+            image_pixel_stats, synth_jpeg_progressive_payloads, "doc_id"
+        ),
+        # same levels, same closed form — only the container differs
+        oracle=_MEDIA_JPEG_COLOR_PIXEL_ORACLE,
+        doc="""REAL PROGRESSIVE JPEG decode (SOF2): eight successive-approximation
+        scans — interleaved DC first (Al=1), per-component AC first scans with
+        EOBn band runs, per-component AC refinements, and the DC refinement
+        bit scan — accumulated into coefficient arrays and only then
+        dequantized/IDCT'd. Same closed-form levels (and hence the SAME
+        oracle) as media_jpeg_color_pixel_stats: only the container differs,
+        so any defect in spectral selection, band runs, refinement bits, or
+        scan ordering breaks the hash.""",
+    ),
+)
 
 
 # synth_jpeg_block_payloads: bx = 1 + doc%3, by = 1 + doc%2, level(xb,yb)
@@ -1050,22 +1130,18 @@ FROM blk
 GROUP BY doc_id, bx, by
 ORDER BY doc_id
 """
-
-
-def _media_ogg_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Ogg/Vorbis container walk (RFC 3533): per-page capture
-    pattern AND CRC verification (the 0x04c11db7 non-reflected page CRC,
-    recomputed with the crc field zeroed), lacing-table packet
-    reassembly, Vorbis identification-header parse, EOS-granule sample
-    count — over CRC-correct synthesized containers with closed-form
-    stream parameters. Audio DECODE stays honestly stubbed (needs
-    libvorbis); the container layer is real, like the MP3 frame-header
-    and AVI/RIFF walks."""
-    from frontier.multimodal import extract_ogg_metadata
-    from frontier.synth import synth_ogg_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return extract_ogg_metadata(synth_ogg_payloads(docs)).orderBy("doc_id")
+_register(
+    "media_jpeg_pixel_stats",
+    QueryDef(
+        build=_decoded(image_pixel_stats, synth_jpeg_block_payloads, "doc_id"),
+        oracle=_MEDIA_JPEG_PIXEL_ORACLE,
+        doc="""REAL baseline JPEG decode — DHT canonical-Huffman parsing, byte
+        unstuffing, DC sign extension, dequant, orthonormal 2D IDCT — over
+        grayscale JPEGs built from DCT-exact constant blocks (DC-only, even
+        levels divide the q=16 table), so the lossy format becomes closed-form
+        checkable; per-block sums/moments re-derived in SQL.""",
+    ),
+)
 
 
 # synth_ogg_payloads: channels = 1 + doc%2, rate = [8000,16000,22050,
@@ -1083,22 +1159,21 @@ SELECT doc_id,
 FROM documents
 ORDER BY doc_id
 """
-
-
-def _media_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL animated-GIF frame walk: multi-frame iteration with Graphic
-    Control Extension parsing, per-frame LZW decode, and canvas
-    compositing (full-frame opaque disposal-1 frames here; sub-rect /
-    transparency / disposal-2/3 semantics are pinned by hand-built
-    payloads in tests) over NETSCAPE-looped animations whose every frame
-    is closed-form; per-frame channel sums re-derived in SQL."""
-    from frontier.multimodal import gif_animation_stats
-    from frontier.synth import synth_gif_animation_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return gif_animation_stats(synth_gif_animation_payloads(docs)).orderBy(
-        "doc_id", "frame_no"
-    )
+_register(
+    "media_ogg_metadata",
+    QueryDef(
+        build=_decoded(extract_ogg_metadata, synth_ogg_payloads, "doc_id"),
+        oracle=_MEDIA_OGG_ORACLE,
+        doc="""REAL Ogg/Vorbis container walk (RFC 3533): per-page capture
+        pattern AND CRC verification (the 0x04c11db7 non-reflected page CRC,
+        recomputed with the crc field zeroed), lacing-table packet
+        reassembly, Vorbis identification-header parse, EOS-granule sample
+        count — over CRC-correct synthesized containers with closed-form
+        stream parameters. Audio DECODE stays honestly stubbed (needs
+        libvorbis); the container layer is real, like the MP3 frame-header
+        and AVI/RIFF walks.""",
+    ),
+)
 
 
 # synth_gif_animation_payloads: nf = 1 + doc%4, w = 4 + doc%5,
@@ -1129,20 +1204,25 @@ FROM px
 GROUP BY doc_id, f, w, h
 ORDER BY doc_id, frame_no
 """
+_register(
+    "media_gif_frame_stats",
+    QueryDef(
+        build=_decoded(
+            gif_animation_stats, synth_gif_animation_payloads,
+            "doc_id", "frame_no",
+        ),
+        oracle=_MEDIA_GIF_FRAMES_ORACLE,
+        doc="""REAL animated-GIF frame walk: multi-frame iteration with Graphic
+        Control Extension parsing, per-frame LZW decode, and canvas
+        compositing (full-frame opaque disposal-1 frames here; sub-rect /
+        transparency / disposal-2/3 semantics are pinned by hand-built
+        payloads in tests) over NETSCAPE-looped animations whose every frame
+        is closed-form; per-frame channel sums re-derived in SQL.""",
+    ),
+)
 
 
 def _media_mixed_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-format media column — the shape a real multimodal crawl
-    produces: ONE binary column whose payloads alternate BMP / PNG
-    (palette/interlaced/RGBA/truecolor) / GIF (interlaced and not) /
-    grayscale JPEG / color JPEG (with restart intervals) by doc_id, with
-    the decode CASCADE (magic-number dispatch) routing each payload to
-    the right real decoder inside one shuffle-free kernel. The oracle is
-    the per-format closed form selected by the same doc_id arithmetic —
-    a dispatch that misroutes or a decoder that breaks on any one format
-    fails the whole hash."""
-    from frontier.multimodal import image_pixel_stats
-
     return image_pixel_stats(_mixed_media_column(spark, sf_dir)).orderBy(
         "doc_id"
     )
@@ -1170,16 +1250,22 @@ def _media_mixed_oracle() -> str:
     )
 
 
-def _media_wav_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PCM sample decode (chunk walk to the data chunk, int16 LE) over
-    WAVs whose every sample is closed-form; the oracle recomputes amplitude
-    sums and zero crossings from the formula — the crossing count is
-    order-sensitive, so mis-framed or byte-swapped decode cannot match."""
-    from frontier.multimodal import audio_pcm_stats
-    from frontier.synth import synth_pcm_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return audio_pcm_stats(synth_pcm_payloads(docs)).orderBy("doc_id")
+_register(
+    "media_mixed_pixel_stats",
+    QueryDef(
+        build=_media_mixed_pixel_stats,
+        oracle=_media_mixed_oracle(),
+        doc="""Mixed-format media column — the shape a real multimodal crawl
+        produces: ONE binary column whose payloads alternate BMP / PNG
+        (palette/interlaced/RGBA/truecolor) / GIF (interlaced and not) /
+        grayscale JPEG / color JPEG (with restart intervals) by doc_id, with
+        the decode CASCADE (magic-number dispatch) routing each payload to
+        the right real decoder inside one shuffle-free kernel. The oracle is
+        the per-format closed form selected by the same doc_id arithmetic —
+        a dispatch that misroutes or a decoder that breaks on any one format
+        fails the whole hash.""",
+    ),
+)
 
 
 # synth_pcm_payloads: n = 50 + doc%100, sample[i] = ((doc*13 + i*17) % 4001)
@@ -1209,33 +1295,17 @@ FROM lagged
 GROUP BY doc_id
 ORDER BY doc_id
 """
-
-
-def _media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL content-derived AUDIO embeddings: synthesized FLAC streams
-    through the full verified decode (CRC-8/CRC-16, all four subframe
-    types) into embed_audio_content — 16 temporal segments of floor-mean
-    absolute amplitude, components m/32768 (exact dyadic rationals). The
-    oracle re-derives every segment from the closed-form sample formula;
-    idx_dot pins segment ORDER, so a re-ordered or mis-framed decode
-    cannot match."""
-    from frontier.multimodal import extract_media_features
-    from frontier.synth import synth_flac_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = extract_media_features(synth_flac_payloads(docs), dim=16)
-    return out.select(
-        "doc_id",
-        F.expr(
-            "aggregate(embedding, CAST(0.0 AS DOUBLE),"
-            " (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-        ).alias("sq_norm"),
-        F.expr(
-            "aggregate(zip_with(embedding, sequence(1, 16),"
-            " (v, i) -> CAST(v AS DOUBLE) * CAST(i AS DOUBLE)),"
-            " CAST(0.0 AS DOUBLE), (a, x) -> a + x)"
-        ).alias("idx_dot"),
-    ).orderBy("doc_id")
+_register(
+    "media_wav_pcm_stats",
+    QueryDef(
+        build=_decoded(audio_pcm_stats, synth_pcm_payloads, "doc_id"),
+        oracle=_MEDIA_WAV_PCM_ORACLE,
+        doc="""REAL PCM sample decode (chunk walk to the data chunk, int16 LE) over
+        WAVs whose every sample is closed-form; the oracle recomputes amplitude
+        sums and zero crossings from the formula — the crossing count is
+        order-sensitive, so mis-framed or byte-swapped decode cannot match.""",
+    ),
+)
 
 
 # synth_flac_payloads sample formula (see _MEDIA_FLAC_PCM_ORACLE), 16
@@ -1277,21 +1347,23 @@ FROM m
 GROUP BY doc_id
 ORDER BY doc_id
 """
+_register(
+    "media_audio_features",
+    QueryDef(
+        build=_decoded(_embedding_moments, synth_flac_payloads, "doc_id"),
+        oracle=_MEDIA_AUDIO_FEATURES_ORACLE,
+        doc="""REAL content-derived AUDIO embeddings: synthesized FLAC streams
+        through the full verified decode (CRC-8/CRC-16, all four subframe
+        types) into embed_audio_content — 16 temporal segments of floor-mean
+        absolute amplitude, components m/32768 (exact dyadic rationals). The
+        oracle re-derives every segment from the closed-form sample formula;
+        idx_dot pins segment ORDER, so a re-ordered or mis-framed decode
+        cannot match.""",
+    ),
+)
 
 
 def _ann_media_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN over REAL content-derived embeddings end to end: the
-    six-format mixed media column → decode cascade → grid-intensity
-    embeddings → brute-force cosine top-3 for the first ten docs (the
-    ANN family's documented exact baseline; the LSH-banded scale path is
-    dedup_media_embedding_cosine). All arithmetic that decides the
-    ranking is exact: integer dots/norms, one correctly-rounded
-    sqrt/divide per pair identical in both engines, ties broken by id —
-    so the emitted (neighbor, rank) pairs are bit-stable. Scale shape:
-    the query side is a 10-row broadcast; the corpus side streams
-    through one projection — payloads never cross an exchange."""
-    from frontier.multimodal import extract_media_features
-
     emb = extract_media_features(_mixed_media_column(spark, sf_dir), dim=16)
     cells = (
         emb.select(
@@ -1389,34 +1461,36 @@ def _ann_media_topk_oracle() -> str:
     return head.rstrip() + ",\n" + _ANN_MEDIA_TOPK_TAIL
 
 
-def _media_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL TIFF pixel decode (round-5 sixth cascade format): header/IFD
-    walk in BOTH byte orders (MM for doc%3==0, II otherwise), tag
-    extraction, two-row strip framing, PackBits expansion (doc%2==1) —
-    over TIFFs carrying the same closed-form pixel grid as the BMP
-    query, so the identical oracle gates a third, entirely different
-    container walk."""
-    from frontier.multimodal import image_pixel_stats
-    from frontier.synth import synth_tiff_pixel_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_pixel_stats(synth_tiff_pixel_payloads(docs)).orderBy("doc_id")
-
-
-def _media_flac_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL FLAC sample decode (round-4 verdict #5 — the one compressed
-    audio codec hand-rollable from the stdlib): STREAMINFO + frame walk
-    with VERIFIED CRC-8/CRC-16, CONSTANT/VERBATIM/FIXED(0-4)/LPC
-    subframes, Rice residual partitions — over spec-correct synthesized
-    streams whose samples are closed-form (modulus walk + constant
-    tail, so all four subframe types fire). Same order-sensitive stats
-    contract as media_wav_pcm_stats: a broken predictor, mis-framed
-    subframe, or wrong Rice parameter changes the zero-crossing count."""
-    from frontier.multimodal import flac_pcm_stats
-    from frontier.synth import synth_flac_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return flac_pcm_stats(synth_flac_payloads(docs)).orderBy("doc_id")
+_register(
+    "ann_media_cosine_topk",
+    QueryDef(
+        build=_ann_media_cosine_topk,
+        oracle=_ann_media_topk_oracle(),
+        doc="""ANN over REAL content-derived embeddings end to end: the
+        six-format mixed media column → decode cascade → grid-intensity
+        embeddings → brute-force cosine top-3 for the first ten docs (the
+        ANN family's documented exact baseline; the LSH-banded scale path is
+        dedup_media_embedding_cosine). All arithmetic that decides the
+        ranking is exact: integer dots/norms, one correctly-rounded
+        sqrt/divide per pair identical in both engines, ties broken by id —
+        so the emitted (neighbor, rank) pairs are bit-stable. Scale shape:
+        the query side is a 10-row broadcast; the corpus side streams
+        through one projection — payloads never cross an exchange.""",
+    ),
+)
+_register(
+    "media_tiff_pixel_stats",
+    QueryDef(
+        build=_decoded(image_pixel_stats, synth_tiff_pixel_payloads, "doc_id"),
+        oracle=_MEDIA_BMP_PIXEL_ORACLE,
+        doc="""REAL TIFF pixel decode (round-5 sixth cascade format): header/IFD
+        walk in BOTH byte orders (MM for doc%3==0, II otherwise), tag
+        extraction, two-row strip framing, PackBits expansion (doc%2==1) —
+        over TIFFs carrying the same closed-form pixel grid as the BMP
+        query, so the identical oracle gates a third, entirely different
+        container walk.""",
+    ),
+)
 
 
 # synth_flac_payloads: n1 = 50 + doc%100 modulus-walk samples
@@ -1451,21 +1525,21 @@ FROM lagged
 GROUP BY doc_id
 ORDER BY doc_id
 """
-
-
-def _media_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual difference-hash (dHash) over REAL decoded pixels: the
-    standard image near-dup key at corpus scale, emitted as four 16-bit
-    Hamming-LSH bands. Every stage is deterministic integer arithmetic
-    (floor-mapped 9x8 resample, (r+g+b)//3 gray, adjacent-pixel
-    comparisons), so the oracle re-derives all 64 bits from the synth
-    pixel formula — a decoder or hasher that mishandles orientation,
-    padding, or bit packing cannot match."""
-    from frontier.multimodal import image_dhash
-    from frontier.synth import synth_bmp_neardup_payloads
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return image_dhash(synth_bmp_neardup_payloads(docs)).orderBy("doc_id")
+_register(
+    "media_flac_pcm_stats",
+    QueryDef(
+        build=_decoded(flac_pcm_stats, synth_flac_payloads, "doc_id"),
+        oracle=_MEDIA_FLAC_PCM_ORACLE,
+        doc="""REAL FLAC sample decode (round-4 verdict #5 — the one compressed
+        audio codec hand-rollable from the stdlib): STREAMINFO + frame walk
+        with VERIFIED CRC-8/CRC-16, CONSTANT/VERBATIM/FIXED(0-4)/LPC
+        subframes, Rice residual partitions — over spec-correct synthesized
+        streams whose samples are closed-form (modulus walk + constant
+        tail, so all four subframe types fire). Same order-sensitive stats
+        contract as media_wav_pcm_stats: a broken predictor, mis-framed
+        subframe, or wrong Rice parameter changes the zero-crossing count.""",
+    ),
+)
 
 
 # synth_bmp_neardup_payloads: base = doc - doc%3, delta = (doc%3)*2,
@@ -1519,6 +1593,20 @@ _MEDIA_DHASH_ORACLE = (
     + _DHASH_CTES
     + "SELECT doc_id, b0, b1, b2, b3 FROM img_dh ORDER BY doc_id"
 )
+_register(
+    "media_image_dhash",
+    QueryDef(
+        build=_decoded(image_dhash, synth_bmp_neardup_payloads, "doc_id"),
+        oracle=_MEDIA_DHASH_ORACLE,
+        doc="""Perceptual difference-hash (dHash) over REAL decoded pixels: the
+        standard image near-dup key at corpus scale, emitted as four 16-bit
+        Hamming-LSH bands. Every stage is deterministic integer arithmetic
+        (floor-mapped 9x8 resample, (r+g+b)//3 gray, adjacent-pixel
+        comparisons), so the oracle re-derives all 64 bits from the synth
+        pixel formula — a decoder or hasher that mishandles orientation,
+        padding, or bit packing cannot match.""",
+    ),
+)
 
 # Banded-Hamming pairing tail over the img_dh hash table — identical
 # scheme to dedup_simhash_hamming (4 bands, pigeonhole full recall at
@@ -1557,18 +1645,6 @@ ORDER BY doc_a, doc_b
 
 
 def _dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs: REAL pixel decode → dHash → 4x16-bit
-    banded Hamming LSH → xor-popcount verify at distance <= 3. The image
-    analogue of ``dedup_simhash_hamming``: candidate generation is a
-    (band, value) equi-join on compact int keys — no all-pairs work, no
-    pixels past the hash kernel — so the plan holds at 10^10 images. The
-    hash table is localCheckpointed: it is referenced three times
-    downstream (buckets + both self-join sides) and multi-referenced
-    views defeat cache substitution (the pagerank_fetch_plan pathology),
-    which here would re-run the decode kernel per reference."""
-    from frontier.multimodal import image_dhash
-    from frontier.synth import synth_bmp_neardup_payloads
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     hashes = image_dhash(synth_bmp_neardup_payloads(docs)).localCheckpoint(
         eager=True
@@ -1590,28 +1666,27 @@ _DEDUP_DHASH_ORACLE = (
         **{f"h{k}": f"bit_count(xor(a{k}, c{k}))" for k in range(4)}
     )
 )
+_register(
+    "dedup_image_dhash",
+    QueryDef(
+        build=_dedup_image_dhash,
+        oracle=_DEDUP_DHASH_ORACLE,
+        doc="""Image near-duplicate pairs: REAL pixel decode → dHash → 4x16-bit
+        banded Hamming LSH → xor-popcount verify at distance <= 3. The image
+        analogue of ``dedup_simhash_hamming``: candidate generation is a
+        (band, value) equi-join on compact int keys — no all-pairs work, no
+        pixels past the hash kernel — so the plan holds at 10^10 images. The
+        hash table is localCheckpointed: it is referenced three times
+        downstream (buckets + both self-join sides) and multi-referenced
+        views defeat cache substitution (the pagerank_fetch_plan pathology),
+        which here would re-run the decode kernel per reference.""",
+    ),
+)
 
 
 def _dedup_media_embedding_cosine(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Embedding-dedup over REAL content-derived vectors end to end:
-    planted near-duplicate BMPs (uniform brightness shifts with mod-256
-    wraparound perturbations) → the real decode cascade →
-    embed_image_content grid-intensity embeddings → banded sign-sketch
-    LSH (4 bands × 4 above-mean bits, capped buckets, OR-construction)
-    → exact integer cosine verify: keep pairs with cos ≥ 0.99, tested as
-    ``10^4·dot² ≥ 9801·‖a‖²·‖b‖²`` on the integer grid values (all
-    int64-safe), so the decision and the emitted (dot, norms) are
-    bit-exact. The oracle recomputes embeddings from the closed-form
-    pixel formula — a decoder defect, flipped grid, or broken band join
-    changes the pair set. Scale shape: equality join on (band, bucket)
-    with per-bucket caps, all-pairs confined within buckets — the same
-    plan as dedup_embedding_cosine, with the embedding column now
-    produced from pixels instead of read from parquet."""
-    from frontier.multimodal import extract_media_features
-    from frontier.synth import synth_bmp_neardup_payloads
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = extract_media_features(synth_bmp_neardup_payloads(docs), dim=16)
     sk = emb.select(
@@ -1752,79 +1827,32 @@ ORDER BY doc_a, doc_b
 """
 
 
+_register(
+    "dedup_media_embedding_cosine",
+    QueryDef(
+        build=_dedup_media_embedding_cosine,
+        oracle=_DEDUP_MEDIA_EMBED_ORACLE,
+        doc="""Embedding-dedup over REAL content-derived vectors end to end:
+        planted near-duplicate BMPs (uniform brightness shifts with mod-256
+        wraparound perturbations) → the real decode cascade →
+        embed_image_content grid-intensity embeddings → banded sign-sketch
+        LSH (4 bands × 4 above-mean bits, capped buckets, OR-construction)
+        → exact integer cosine verify: keep pairs with cos ≥ 0.99, tested as
+        ``10^4·dot² ≥ 9801·‖a‖²·‖b‖²`` on the integer grid values (all
+        int64-safe), so the decision and the emitted (dot, norms) are
+        bit-exact. The oracle recomputes embeddings from the closed-form
+        pixel formula — a decoder defect, flipped grid, or broken band join
+        changes the pair set. Scale shape: equality join on (band, bucket)
+        with per-bucket caps, all-pairs confined within buckets — the same
+        plan as dedup_embedding_cosine, with the embedding column now
+        produced from pixels instead of read from parquet.""",
+    ),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        name: qd.build for name, qd in REGISTRY.items()
-    }
-    out["frontier_crawl"] = _frontier_crawl
-    out["frontier_fetch_plan"] = _frontier_fetch_plan
-    out["flagship_tree"] = _flagship_gate
-    out["media_metadata"] = _media_metadata
-    out["warc_ingest"] = _warc_ingest
-    out["warc_dedup_digest"] = _warc_dedup_digest
-    out["warc_cdx_index"] = _warc_cdx_index
-    out["media_audio_metadata"] = _media_audio_metadata
-    out["media_mp3_metadata"] = _media_mp3_metadata
-    out["media_resize"] = _media_resize
-    out["media_frames"] = _media_frames
-    out["media_avi_frame_stats"] = _media_avi_frame_stats
-    out["media_features"] = _media_features
-    out["media_bmp_pixel_stats"] = _media_bmp_pixel_stats
-    out["media_bmp_resize_real"] = _media_bmp_resize_real
-    out["media_png_pixel_stats"] = _media_png_pixel_stats
-    out["media_gif_pixel_stats"] = _media_gif_pixel_stats
-    out["media_jpeg_pixel_stats"] = _media_jpeg_pixel_stats
-    out["media_jpeg_color_pixel_stats"] = _media_jpeg_color_pixel_stats
-    out["media_jpeg_progressive_pixel_stats"] = (
-        _media_jpeg_progressive_pixel_stats
-    )
-    out["media_ogg_metadata"] = _media_ogg_metadata
-    out["media_gif_frame_stats"] = _media_gif_frame_stats
-    out["media_mixed_pixel_stats"] = _media_mixed_pixel_stats
-    out["media_wav_pcm_stats"] = _media_wav_pcm_stats
-    out["media_image_dhash"] = _media_image_dhash
-    out["dedup_image_dhash"] = _dedup_image_dhash
-    out["dedup_media_embedding_cosine"] = _dedup_media_embedding_cosine
-    out["media_flac_pcm_stats"] = _media_flac_pcm_stats
-    out["media_tiff_pixel_stats"] = _media_tiff_pixel_stats
-    out["media_audio_features"] = _media_audio_features
-    out["ann_media_cosine_topk"] = _ann_media_cosine_topk
-    return out
+    return {name: qd.build for name, qd in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    out = {name: qd.oracle for name, qd in REGISTRY.items() if qd.oracle}
-    out["flagship_tree"] = _FLAGSHIP_ORACLE
-    out["frontier_crawl"] = _CRAWL_ORACLE
-    out["frontier_fetch_plan"] = _FETCH_PLAN_ORACLE
-    out["media_metadata"] = _MEDIA_META_ORACLE
-    out["warc_ingest"] = _WARC_INGEST_ORACLE
-    out["warc_dedup_digest"] = _WARC_DEDUP_ORACLE
-    out["warc_cdx_index"] = _WARC_CDX_ORACLE
-    out["media_audio_metadata"] = _MEDIA_AUDIO_ORACLE
-    out["media_mp3_metadata"] = _MEDIA_MP3_ORACLE
-    out["media_resize"] = _MEDIA_RESIZE_ORACLE
-    out["media_frames"] = _MEDIA_FRAMES_ORACLE
-    out["media_avi_frame_stats"] = _MEDIA_AVI_FRAMES_ORACLE
-    out["media_features"] = _MEDIA_FEATURES_ORACLE
-    out["media_bmp_pixel_stats"] = _MEDIA_BMP_PIXEL_ORACLE
-    out["media_bmp_resize_real"] = _MEDIA_BMP_RESIZE_ORACLE
-    # same formula-derived expectation; the PNG decode path must match it
-    out["media_png_pixel_stats"] = _MEDIA_BMP_PIXEL_ORACLE
-    out["media_gif_pixel_stats"] = _MEDIA_GIF_PIXEL_ORACLE
-    out["media_jpeg_pixel_stats"] = _MEDIA_JPEG_PIXEL_ORACLE
-    out["media_jpeg_color_pixel_stats"] = _MEDIA_JPEG_COLOR_PIXEL_ORACLE
-    # same levels, same closed form — only the container differs
-    out["media_jpeg_progressive_pixel_stats"] = _MEDIA_JPEG_COLOR_PIXEL_ORACLE
-    out["media_ogg_metadata"] = _MEDIA_OGG_ORACLE
-    out["media_gif_frame_stats"] = _MEDIA_GIF_FRAMES_ORACLE
-    out["media_mixed_pixel_stats"] = _media_mixed_oracle()
-    out["media_wav_pcm_stats"] = _MEDIA_WAV_PCM_ORACLE
-    out["media_image_dhash"] = _MEDIA_DHASH_ORACLE
-    out["dedup_image_dhash"] = _DEDUP_DHASH_ORACLE
-    out["dedup_media_embedding_cosine"] = _DEDUP_MEDIA_EMBED_ORACLE
-    out["media_flac_pcm_stats"] = _MEDIA_FLAC_PCM_ORACLE
-    out["media_tiff_pixel_stats"] = _MEDIA_BMP_PIXEL_ORACLE
-    out["media_audio_features"] = _MEDIA_AUDIO_FEATURES_ORACLE
-    out["ann_media_cosine_topk"] = _ann_media_topk_oracle()
-    return out
+    return {name: qd.oracle for name, qd in REGISTRY.items()}

@@ -306,18 +306,13 @@ def main() -> None:
     try:
         corpus, seeds, n_hosts = prepare_crawl(spark, sf, workdir)
 
-        from frontier.datapipe import REGISTRY
+        import __spark_entry__ as entrymod
 
-        def _builder(name):
-            if name in REGISTRY:
-                return REGISTRY[name].build
-            import __spark_entry__ as entrymod  # entry-only queries (warc_ingest)
-
-            return entrymod.queries()[name]
+        queries = entrymod.queries()
 
         def _time_one(name: str) -> float:
             start = time.perf_counter()
-            _builder(name)(spark, SF_DIR).write.format("noop").mode(
+            queries[name](spark, SF_DIR).write.format("noop").mode(
                 "overwrite"
             ).save()
             return time.perf_counter() - start

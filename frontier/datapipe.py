@@ -15,18 +15,52 @@ small query side; top-k uses rank-in-partition, not global sorts.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from decimal import Decimal
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
 class QueryDef:
-    """One operator: Spark builder + (optional) DuckDB oracle."""
+    """One operator: Spark builder + DuckDB oracle SQL."""
 
     build: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     doc: str = ""
+
+
+# The driver testdata tables an oracle may read, one DuckDB view each.
+ORACLE_TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+
+def normalize(df: pd.DataFrame, strict: bool = False) -> pd.DataFrame:
+    """Engine-neutral form of a result frame for the oracle comparison:
+    columns in name order, every value rendered to a string, rows sorted.
+    ``strict`` renders floats bit-exactly (``float.hex``, the driver's
+    value-hash rule); otherwise to 9 significant digits."""
+    df = df[sorted(df.columns)].copy()
+
+    def conv(v):
+        if v is None or (isinstance(v, float) and pd.isna(v)):
+            return "<null>"
+        if isinstance(v, Decimal):
+            return str(v)
+        if isinstance(v, float):
+            return float(v).hex() if strict else f"{v:.9g}"
+        if hasattr(v, "isoformat"):
+            return v.isoformat()
+        if isinstance(v, (list, tuple)):
+            return repr(list(v))
+        return str(v)
+
+    for col in df.columns:
+        df[col] = df[col].map(conv)
+    return df.sort_values(list(df.columns), ignore_index=True)
 
 
 def _load(spark: SparkSession, sf_dir: str, *tables: str) -> None:
@@ -68,6 +102,8 @@ REGISTRY: dict[str, QueryDef] = {}
 
 
 def _register(name: str, qd: QueryDef) -> None:
+    if name in REGISTRY:
+        raise ValueError(f"query {name!r} is already registered")
     REGISTRY[name] = qd
 
 

@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import build_spark, host_phase_probe
+from bench import QUIET_MEMCPY_MIN, build_spark, host_phase_probe
 
 ROUNDS = int(os.environ.get("SCALING_ROUNDS", "3"))
 
@@ -39,7 +39,6 @@ ROUNDS = int(os.environ.get("SCALING_ROUNDS", "3"))
 # its samples are visibly noise-spread. Before every timed sample, wait
 # (bounded) for the memcpy probe to clear the degraded-phase threshold,
 # and record the probe next to the sample.
-QUIET_MEMCPY_MIN = float(os.environ.get("SCALING_QUIET_MEMCPY", "22"))
 GATE_MAX_WAIT_S = float(os.environ.get("SCALING_GATE_WAIT", "600"))
 
 

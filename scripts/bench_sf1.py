@@ -104,17 +104,13 @@ def main() -> None:
     spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
 
-    from frontier.datapipe import REGISTRY
     import __spark_entry__ as entrymod
 
-    entry_queries = entrymod.queries()
-
-    def builder(name):
-        return REGISTRY[name].build if name in REGISTRY else entry_queries[name]
+    queries = entrymod.queries()
 
     def time_one(name, sf_dir):
         start = time.perf_counter()
-        builder(name)(spark, sf_dir).write.format("noop").mode(
+        queries[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         return time.perf_counter() - start

@@ -1,52 +1,29 @@
-"""Every REGISTRY operator vs its DuckDB oracle at sf0.001 — a pytest
+"""Every registered query vs its DuckDB oracle at sf0.001 — a pytest
 replica of the driver's correctness gate (rowcount + sorted-value equality
 after column-name sort), so regressions surface before the driver runs."""
 
 import os
-from decimal import Decimal
 
 import duckdb
 import pandas as pd
 import pytest
 
-from frontier.datapipe import REGISTRY
+import __spark_entry__
+from frontier.datapipe import ORACLE_TABLES, REGISTRY, _register, normalize
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+QUERIES = __spark_entry__.queries()
+ORACLES = __spark_entry__.oracle_sql()
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason="driver testdata not present"
 )
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-
-    def conv(v):
-        if v is None or (isinstance(v, float) and pd.isna(v)):
-            return "<null>"
-        if isinstance(v, Decimal):
-            return str(v)
-        if isinstance(v, float):
-            return f"{v:.9g}"
-        if hasattr(v, "isoformat"):
-            return v.isoformat()
-        if isinstance(v, (list, tuple)):
-            return repr(list(v))
-        return str(v)
-
-    for col in df.columns:
-        df[col] = df[col].map(conv)
-    return df.sort_values(list(df.columns), ignore_index=True)
-
-
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
+    for t in ORACLE_TABLES:
         path = f"{SF_DIR}/{t}.parquet"
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
@@ -54,25 +31,25 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_registry_query_matches_oracle(spark, duck, name):
-    qd = REGISTRY[name]
-    got = _normalize(qd.build(spark, SF_DIR).toPandas())
+    got = normalize(QUERIES[name](spark, SF_DIR).toPandas())
     assert len(got) > 0, f"{name} produced no rows at {SF_DIR}"
-    if qd.oracle is None:
-        return
-    want = _normalize(duck.execute(qd.oracle).fetchdf())
+    want = normalize(duck.execute(ORACLES[name]).fetchdf())
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want)
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_register_rejects_duplicate_name():
+    with pytest.raises(ValueError, match="flagship_tree"):
+        _register("flagship_tree", REGISTRY["frontier_crawl"])
 
 
 def test_sitemap_write_roundtrip_pagination(spark):
     """Writer pagination: 25 URLs/host at 10 URLs/file -> 3 files per host
     (10+10+5), every source row survives the XML round-trip exactly once,
     and records point at the file that carried them."""
-    from frontier.datapipe import REGISTRY
-
     rows = REGISTRY["sitemap_write_roundtrip"].build(
         spark, "/root/testdata/sf0.01"
     ).collect()

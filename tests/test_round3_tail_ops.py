@@ -11,7 +11,7 @@ import os
 import pandas as pd
 import pytest
 
-from frontier.datapipe import REGISTRY, _PACK_SEQ_LEN
+from frontier.datapipe import REGISTRY, _PACK_SEQ_LEN, normalize
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -197,21 +197,6 @@ def test_ngram_count_table_cutoff_and_rank(spark, tmp_path):
     assert "c" not in set(got["gram"]) and "c d" not in set(got["gram"])
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-
-    def conv(v):
-        if v is None or (isinstance(v, float) and pd.isna(v)):
-            return "<null>"
-        if isinstance(v, float):
-            return f"{v:.9g}"
-        return str(v)
-
-    for col in df.columns:
-        df[col] = df[col].map(conv)
-    return df.sort_values(list(df.columns), ignore_index=True)
-
-
 def test_round3_ops_fuzz_vs_duckdb(spark, tmp_path):
     """Deterministic adversarial corpus (empty docs, punctuation-only,
     single tokens, pathological repeats, digit runs, mixed case) — every
@@ -256,8 +241,8 @@ def test_round3_ops_fuzz_vs_duckdb(spark, tmp_path):
         "cdx_surt_lookup",
         "ngram_count_table",
     ]:
-        got = _normalize(REGISTRY[name].build(spark, sf).toPandas())
-        want = _normalize(con.execute(REGISTRY[name].oracle).df())
+        got = normalize(REGISTRY[name].build(spark, sf).toPandas())
+        want = normalize(con.execute(REGISTRY[name].oracle).df())
         pd.testing.assert_frame_equal(got, want, check_dtype=False), name
 
 
