@@ -18,7 +18,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: local[N] width: SPARK_GRAFT_CPUS, else the cores this process may run on
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def driver_heap() -> str:
+    """Driver heap: SPARK_GRAFT_MEM, else a quarter of the box's RAM (3g on
+    a 16 GB box, the heap perfbench pins)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_GRAFT_MEM", f"{max(1, ram // 4 // 2**30)}g")
+
 
 # Ephemeral bench artifacts (synthetic corpus, page-sink files, shuffle /
 # checkpoint blocks) live on tmpfs when available: this sandbox's virtual
@@ -181,7 +190,7 @@ def build_spark(cpus: int):
         # into GC collapse (measured: local[8] at 16g took 445 s on a crawl
         # local[32] at 48g did in 56 s; same data). One machine, one memory
         # budget, regardless of how many cores the run uses.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "64g"))
+        .config("spark.driver.memory", driver_heap())
         # G1 wins for the flat-row wave/page output (measured 19.4 s
         # ParallelGC vs 11.9 s G1 for the full 2M-page crawl at local[32];
         # ParallelGC only won when page records were packed into ~50 KB
@@ -370,6 +379,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cpus": CPUS,
+                "heap": driver_heap(),
                 "crawl_urls": urls,
                 "crawl_runs_sec": [s["sec"] for s in samples],
                 "crawl_samples": [

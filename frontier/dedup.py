@@ -279,6 +279,13 @@ def make_member_filter(
     return apply
 
 
+#: Hidden file (Spark's reader skips ``_``-prefixed names) that
+#: ``UrlSeenSet.record_seen`` drops in the table directory before it
+#: appends; a live table without it holds nothing appended since its last
+#: compaction.
+_UNCOMPACTED = "_uncompacted"
+
+
 class UrlSeenSet:
     """Persistent URL-seen set: a parquet table of distinct URLs, filtered
     against with one exact left-anti join.
@@ -330,7 +337,17 @@ class UrlSeenSet:
         return lambda candidates: candidates.join(seen_urls, url_col, "left_anti")
 
     def record_seen(self, urls: DataFrame, url_col: str = "url") -> None:
-        """Append this round's URLs (compacted to distinct) to the table."""
+        """Append this round's URLs (compacted to distinct) to the table.
+
+        The table is marked uncompacted before the append, so a crash
+        between the two costs one extra compaction, never a skipped one. A
+        compaction that crashed in its rename window is finished first: an
+        append to a fresh directory would hide the old table from
+        :meth:`_recover`."""
+        self._recover()
+        base = self.path.rstrip("/")
+        os.makedirs(base, exist_ok=True)
+        open(os.path.join(base, _UNCOMPACTED), "w").close()
         (
             urls.select(F.col(url_col).alias("url"))
             .distinct()
@@ -362,6 +379,13 @@ class UrlSeenSet:
         """Rewrite the table as a single distinct snapshot (periodic
         compaction per the north rule).
 
+        A no-op, with no Spark job, when nothing was appended since the last
+        compaction: only a table that :meth:`record_seen` marked
+        uncompacted is rewritten, and the fresh snapshot carries no mark. A
+        table written before the mark existed is compacted on its next
+        append; until then it may hold duplicates, which the seen filter's
+        anti-join answers exactly.
+
         Crash-safe on a rename-atomic filesystem: the snapshot is written
         to a temp sibling, the live table is swapped out via two renames
         (old → trash, tmp → live), and the trash + leftover temp dirs are
@@ -371,21 +395,27 @@ class UrlSeenSet:
         table is never lost and the sweep below can only run when a live
         base exists. On object stores without atomic rename, compact into
         an Iceberg/Delta table instead — this class models that dedup
-        table locally."""
-        self._recover()
-        seen = self._seen_table()
-        if seen is None:
-            return
+        table locally. A crash in the rename window restores the old table
+        with its mark, so the next compact redoes the rewrite."""
         import shutil
         import uuid
 
+        self._recover()
         base = self.path.rstrip("/")
-        tmp = f"{base}__compact-{uuid.uuid4().hex[:8]}"
-        trash = f"{base}__trash-{uuid.uuid4().hex[:8]}"
-        seen.select("url").distinct().write.mode("overwrite").parquet(tmp)
-        os.rename(base, trash)
-        os.rename(tmp, base)
-        shutil.rmtree(trash, ignore_errors=True)
+        if not os.path.isdir(base):
+            return  # no rounds recorded yet
+        seen = (
+            self._seen_table()
+            if os.path.exists(os.path.join(base, _UNCOMPACTED))
+            else None
+        )
+        if seen is not None:
+            tmp = f"{base}__compact-{uuid.uuid4().hex[:8]}"
+            trash = f"{base}__trash-{uuid.uuid4().hex[:8]}"
+            seen.select("url").distinct().write.mode("overwrite").parquet(tmp)
+            os.rename(base, trash)
+            os.rename(tmp, base)
+            shutil.rmtree(trash, ignore_errors=True)
         # sweep leftovers of compactions that crashed before their cleanup —
         # safe because _recover() guaranteed the live base exists
         parent, name = os.path.split(base)

@@ -36,6 +36,7 @@ present, case-sensitively.  An empty Disallow value is a no-op group line
 
 from __future__ import annotations
 
+import os
 import re
 from typing import Iterator
 
@@ -467,6 +468,18 @@ def robots_rules_from_store(
     return rows.mapInPandas(kernel, ROBOTS_RULES_SCHEMA)
 
 
+def _sink_is_empty(pages_dir: str) -> bool:
+    """True when a crawl's page sink holds no file Spark's reader lists,
+    read from a driver-side listing (no Spark job). The wave kernel
+    publishes a ``part-*.parquet`` only for a task that emitted pages; its
+    in-flight ``.part-*.tmp`` files are hidden, like every ``.``/``_``
+    name."""
+    for _, _, files in os.walk(pages_dir):
+        if any(not name.startswith((".", "_")) for name in files):
+            return False
+    return True
+
+
 def crawl_fetch_plan(
     spark,
     homepages,
@@ -505,11 +518,14 @@ def crawl_fetch_plan(
     ``fetch_rank``, ``fetch_budget``).  No Spark job runs after the wave
     loop: the rules snapshot is consumed once, inside the plan, so every
     action on the returned plan re-runs the rules kernel (cache or write
-    the plan to read it twice).  At 10¹⁰-URL scale every step is a single
-    equi-join or rank-in-partition — no global sort, no driver
-    materialization.
+    the plan to read it twice).  A round whose page sink holds no page
+    file (every sitemap URL seen, say; a driver-side listing decides)
+    skips steps 2-4: its plan is the empty sink's scan with the same
+    columns, types and nullability, and writing it runs one small job.
+    At 10¹⁰-URL scale every step is a single equi-join or
+    rank-in-partition — no global sort, no driver materialization.
     """
-    from frontier.schedule import fetch_plan
+    from frontier.schedule import fetch_plan, with_canonical_host
     from frontier.waves import prepare_fetches, sitemap_tree_for_homepages
 
     if not crawl_kwargs.get("fetches_prepared"):
@@ -525,6 +541,14 @@ def crawl_fetch_plan(
     forest = sitemap_tree_for_homepages(spark, homepages, fetches, **crawl_kwargs)
     # the plan reads only the page sink, the seed frame and the store
     forest.unpersist(delete_pages=False)
+    if _sink_is_empty(forest.pages_dir):
+        # no page, so no plan row whatever the rules say: the empty sink's
+        # scan with the plan's three columns, no rules/filter/rank plan
+        return with_canonical_host(forest.pages, "page_url").select(
+            "*",
+            F.lit(0).alias("fetch_rank"),
+            F.lit(default_budget).alias("fetch_budget"),
+        )
     rules = robots_rules_from_store(forest.seeds, fetches, user_agent)
     pages = robots_filter(
         forest.all_pages(),

@@ -177,7 +177,8 @@ class SitemapForest:
     ``pages``: one row per extracted page record with owning-sitemap lineage.
     """
 
-    nodes: DataFrame
+    #: the nodes table, read through ``nodes``
+    _nodes: DataFrame
     pages: DataFrame
     wave_metrics: DataFrame | None = None
     #: the crawl's normalized seed frame, one ``seed`` row per website root
@@ -191,6 +192,18 @@ class SitemapForest:
     #: frames the wave loop materialized (persisted frontiers, parse
     #: snapshots); the forest's DataFrames read them until unpersist()
     _wave_frames: list[DataFrame] = field(default_factory=list)
+    #: persist ``nodes`` on its first read: a crawl's nodes table is a
+    #: union/window plan over the wave outputs that every nodes-side action
+    #: would otherwise re-run, and persisting plans it on the driver, so a
+    #: caller that never reads it (crawl_fetch_plan) pays neither
+    _persist_nodes: bool = False
+
+    @property
+    def nodes(self) -> DataFrame:
+        if self._persist_nodes:
+            self._persist_nodes = False
+            self._nodes.persist()
+        return self._nodes
 
     def all_sitemaps(self) -> DataFrame:
         """Pre-order traversal (usp sitemap.py:405-413), roots excluded per
@@ -208,8 +221,12 @@ class SitemapForest:
         loop's persisted frontiers and parse snapshots, and (for forests
         that own a temp page dir) the page parquet files. After this the
         ``pages`` DataFrame is dead; long-lived sessions running many
-        crawls should call this when done with a forest."""
-        self.nodes.unpersist(blocking=False)
+        crawls should call this when done with a forest. A nodes table
+        never read was never persisted, and is not persisted by a later
+        read either."""
+        self._persist_nodes = False
+        if self._nodes.is_cached:
+            self._nodes.unpersist(blocking=False)
         for frame in self._wave_frames:
             _free(frame)
         self._wave_frames = []
@@ -985,8 +1002,12 @@ def sitemap_tree_for_homepages(
     they simply don't appear in this crawl's forest.
     ``record_seen=True`` appends every sitemap URL this crawl attempted
     (all non-root nodes, 404/invalid included) to the seen table afterwards
-    (a round that attempted nothing appends nothing) — call
-    ``seen_set.compact()`` periodically between rounds.
+    — call ``seen_set.compact()`` between rounds. A round that attempted
+    nothing appends nothing, so the next ``compact()`` is a no-op without
+    a Spark job (it rewrites the table only after an append).
+
+    The forest's ``nodes`` table is persisted when first read, not at
+    assembly; ``forest.unpersist()`` frees it.
     """
     LAST_WAVE_TIMINGS.clear()
     if store_urls_unique is None:
@@ -1157,7 +1178,8 @@ def _assemble(
     125-126), add website roots, re-densify root-child seq, and wire
     ``pages`` to the wave kernels' side-written parquet (see schemas.py
     PARSE_OUT_SCHEMA rationale — pages never transit node rows and are
-    parsed exactly once)."""
+    parsed exactly once). Runs no Spark job and caches nothing: the nodes
+    table is persisted on its first read (``SitemapForest.nodes``)."""
     nodes = parse_out.filter(F.col("rec") == "node").select(*_NODE_COLS)
     # a root-level invalid result is dropped together with (nonexistent)
     # descendants; deeper invalids stay as tree nodes
@@ -1187,12 +1209,7 @@ def _assemble(
     )
     level0 = nodes.filter(F.col("level") == 0).withColumn("seq", root_child_rank)
     nodes = level0.unionByName(nodes.filter(F.col("level") != 0))
-    # persist: the (small) nodes table is read by the page pass's leaf
-    # broadcast AND by every nodes-side action; without this the
-    # union-of-snapshots + window plan re-executes per consumer
-    all_nodes = (
-        roots.unionByName(nodes).withColumn("depth", F.col("level") + 1).persist()
-    )
+    all_nodes = roots.unionByName(nodes).withColumn("depth", F.col("level") + 1)
 
     # pages = plain parquet scan of the wave kernels' side-written files —
     # no join, no re-parse, no reference to the fetch store. Filters and
@@ -1206,11 +1223,12 @@ def _assemble(
         .parquet(pages_root)
     )
     return SitemapForest(
-        nodes=all_nodes,
+        _nodes=all_nodes,
         pages=pages,
         seeds=seeds,
         pages_dir=pages_root,
         _owns_pages_dir=owns_pages,
+        _persist_nodes=True,
     )
 
 
@@ -1433,4 +1451,4 @@ def sitemap_forest_from_str(spark: SparkSession, content: str) -> SitemapForest:
             }
         )
     pages_df = spark.createDataFrame(page_rows, PAGES_FLAT_SCHEMA)
-    return SitemapForest(nodes=nodes_df, pages=pages_df)
+    return SitemapForest(_nodes=nodes_df, pages=pages_df)

@@ -5,11 +5,15 @@ Round 1 crawls a corpus cold and records every attempted sitemap URL;
 round 2 re-crawls the SAME seeds with the seen set active — every
 frontier is anti-joined against the seen table once, in its close, so the
 engine schedules nothing and touches no payload bytes. The ratio is the
-cost of discovering "nothing new to do" at 10^10 scale.
+cost of discovering "nothing new to do" at 10^10 scale. Both rounds record
+what they attempted and then compact the seen set; the report gives each
+round's seconds and Spark jobs, and the same for its ``compact()``, which
+rewrites the table after the cold round and is a no-op after the recrawl.
 
     python scripts/bench_recrawl.py [n_hosts]
 
-Writes BENCH/recrawl.json.
+Cores and heap follow ``bench.py`` (the box's cores, a quarter of its RAM);
+the report records both. Writes BENCH/recrawl.json.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import build_spark
+from bench import CPUS, build_spark, driver_heap
 
 
 def main() -> None:
@@ -37,8 +41,19 @@ def main() -> None:
     corpus_path = os.path.join(workdir, "corpus")
     seen_path = os.path.join(workdir, "seen")
 
-    spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark(CPUS)
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+
+    def timed(name, action):
+        """(seconds, Spark jobs, result) of one call, jobs counted by group."""
+        sc.setJobGroup(name, name)
+        t0 = time.perf_counter()
+        out = action()
+        seconds = time.perf_counter() - t0
+        sc._jsc.clearJobGroup()
+        return seconds, len(sc.statusTracker().getJobIdsForGroup(name)), out
+
     try:
         from frontier.dedup import UrlSeenSet
         from frontier.synth import synth_crawl_corpus
@@ -77,27 +92,38 @@ def main() -> None:
         crawl()  # untimed warm-up (JIT + worker pool), no seen involvement
         os.sync()
 
-        t0 = time.perf_counter()
-        n_pages1, n_nodes1 = crawl(seen_set=seen, record_seen=True)
-        cold_s = time.perf_counter() - t0
-        seen.compact()
+        cold_s, cold_jobs, (n_pages1, n_nodes1) = timed(
+            "cold", lambda: crawl(seen_set=seen, record_seen=True)
+        )
+        cold_compact_s, cold_compact_jobs, _ = timed("cold-compact", seen.compact)
 
-        t0 = time.perf_counter()
-        n_pages2, n_nodes2 = crawl(seen_set=seen)
-        warm_s = time.perf_counter() - t0
+        warm_s, warm_jobs, (n_pages2, n_nodes2) = timed(
+            "recrawl", lambda: crawl(seen_set=seen, record_seen=True)
+        )
+        warm_compact_s, warm_compact_jobs, _ = timed(
+            "recrawl-compact", seen.compact
+        )
 
         urls = n_pages1 + (n_nodes1 - n_hosts)
         result = {
             "n_hosts": n_hosts,
+            "cpus": CPUS,
+            "heap": driver_heap(),
             "cold": {
                 "seconds": round(cold_s, 2),
+                "spark_jobs": cold_jobs,
                 "pages": n_pages1,
                 "urls_per_sec": round(urls / cold_s, 1),
+                "compact_s": round(cold_compact_s, 3),
+                "compact_jobs": cold_compact_jobs,
             },
             "recrawl": {
                 "seconds": round(warm_s, 2),
+                "spark_jobs": warm_jobs,
                 "pages": n_pages2,
                 "nodes_nonroot": n_nodes2 - n_hosts,
+                "compact_s": round(warm_compact_s, 3),
+                "compact_jobs": warm_compact_jobs,
             },
             "speedup": round(cold_s / warm_s, 1),
             "seen_rows": spark.read.parquet(seen_path).count(),

@@ -11,7 +11,10 @@ Each candidate set is filtered ``--reps`` times:
 Every application must return the closed-form unseen count (0 and 9,900);
 the script exits non-zero otherwise.
 
-    SPARK_GRAFT_CPUS=4 SPARK_GRAFT_MEM=3g python scripts/bench_seen_filter.py
+    python scripts/bench_seen_filter.py
+
+Cores and heap follow ``bench.py`` (the box's cores, a quarter of its RAM;
+``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_MEM`` override them).
 
 Prints one JSON report (median, quartiles, min/max per candidate set).
 ``BENCH/seen_filter.json`` holds an earlier run of this script that also
@@ -32,7 +35,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from bench import SCRATCH, build_spark  # noqa: E402
+from bench import CPUS, SCRATCH, build_spark, driver_heap  # noqa: E402
 
 
 def _spread(samples: list[float]) -> dict:
@@ -116,10 +119,8 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=5)
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
-    os.environ.setdefault("SPARK_GRAFT_MEM", "3g")
     workdir = os.path.join(SCRATCH or "/tmp", f"seen_filter_{os.getpid()}")
-    spark = build_spark(cpus)
+    spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         results = [measure(spark, workdir, n, args.reps) for n in args.sizes]
@@ -127,8 +128,8 @@ def main() -> None:
         shutil.rmtree(workdir, ignore_errors=True)
         spark.stop()
     report = {
-        "cores": cpus,
-        "heap": os.environ["SPARK_GRAFT_MEM"],
+        "cores": CPUS,
+        "heap": driver_heap(),
         "reps": args.reps,
         "results": results,
     }

@@ -19,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import SCRATCH, build_spark, host_phase_probe
+from bench import CPUS, SCRATCH, build_spark, driver_heap, host_phase_probe
 
 SF01 = "/root/testdata/sf0.1"
 REPL = 10
@@ -101,7 +101,7 @@ def main() -> None:
     only = sys.argv[1:] or DEFAULT_QUERIES
     sf1_dir = os.path.join(SCRATCH or "/tmp", "sf1")
 
-    spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
@@ -115,7 +115,10 @@ def main() -> None:
         ).save()
         return time.perf_counter() - start
 
-    result = {"repl": REPL, "queries": {}, "probe": {}}
+    result = {
+        "repl": REPL, "cpus": CPUS, "heap": driver_heap(), "queries": {},
+        "probe": {},
+    }
     try:
         if not os.path.exists(f"{sf1_dir}/documents.parquet"):
             build_sf1(spark, sf1_dir)

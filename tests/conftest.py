@@ -23,3 +23,20 @@ def spark():
     )
     yield session
     session.stop()
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(group, action, *args)``: the Spark jobs ``action(*args)``
+    launches, counted by job group."""
+
+    def count(group, action, *args):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            action(*args)
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

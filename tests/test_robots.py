@@ -423,6 +423,43 @@ def test_crawl_fetch_plan_equals_composed_steps(spark, salt_buckets, seed_kind):
     forest.unpersist()
 
 
+@pytest.mark.parametrize("salt_buckets", [0, 4])
+def test_crawl_fetch_plan_empty_round(spark, tmp_path, jobs_in, salt_buckets):
+    """A round behind a seen set holding every sitemap URL finds no page:
+    its plan is empty, has exactly the schema of the composed steps' plan
+    over the same inputs, and its write runs at most one Spark job (no
+    rules kernel, no ranking)."""
+    from frontier.dedup import UrlSeenSet
+    from frontier.robots import crawl_fetch_plan
+    from frontier.synth import synth_crawl_corpus
+    from frontier.waves import sitemap_tree_for_homepages
+
+    corpus = synth_crawl_corpus(
+        spark, 2, leaves_per_host=2, pages_per_leaf=5, robots_rules=True
+    )
+    seeds = [f"http://host{i}.example.com/" for i in range(2)]
+    seen = UrlSeenSet(spark, str(tmp_path / "seen"))
+    sitemap_tree_for_homepages(
+        spark, seeds, corpus, use_known_paths=False,
+        seen_set=seen, record_seen=True,
+    ).unpersist()
+
+    got = crawl_fetch_plan(
+        spark, seeds, corpus, round_seconds=20.0, default_budget=8,
+        salt_buckets=salt_buckets, use_known_paths=False, seen_set=seen,
+    )
+    want, forest = _composed_plan(
+        spark, seeds, corpus, salt_buckets, use_known_paths=False,
+        seen_set=seen,
+    )
+    assert got.schema == want.schema
+    out = str(tmp_path / "plan")
+    assert jobs_in(f"empty-plan-{salt_buckets}", got.write.parquet, out) <= 1
+    assert spark.read.parquet(out).count() == 0
+    assert want.count() == 0
+    forest.unpersist()
+
+
 def test_crawl_fetch_plan_reads_redirected_robots(spark):
     """A robots.txt that 301-redirects is followed by the crawl (its
     Sitemap: line is read) and its rules must apply too: the plan drops

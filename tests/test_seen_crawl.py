@@ -88,8 +88,10 @@ def test_second_crawl_skips_everything(spark, tmp_path):
 
 
 def _listing(path):
+    """(relative name, size) of every file under ``path``."""
     return sorted(
-        os.path.relpath(os.path.join(d, f), path)
+        (os.path.relpath(os.path.join(d, f), path),
+         os.path.getsize(os.path.join(d, f)))
         for d, _, files in os.walk(path)
         for f in files
     )
@@ -228,6 +230,79 @@ def test_compact_crash_recovery(spark, tmp_path):
     leftovers = [e for e in os.listdir(str(tmp_path))
                  if "__trash-" in e or "__compact-" in e]
     assert leftovers == []
+
+
+def test_compact_without_append_is_a_no_op(spark, tmp_path, jobs_in):
+    """compact() rewrites only a table appended to since its last
+    compaction: a second compact launches no Spark job and leaves every
+    file as it was; a later record_seen makes the next compact
+    de-duplicate again. The uncompacted mark is invisible to readers."""
+    base = str(tmp_path / "seen")
+    seen = UrlSeenSet(spark, base, expected_urls=1024)
+    urls = [(f"http://s.com/p{i}",) for i in range(10)]
+    seen.record_seen(spark.createDataFrame(urls, "url string"))
+    seen.record_seen(spark.createDataFrame(urls[5:], "url string"))
+    # the mark is hidden from the table's readers
+    assert "_uncompacted" in os.listdir(base)
+    assert spark.read.parquet(base).columns == ["url"]
+    assert seen._seen_table().count() == 15
+
+    seen.compact()
+    assert spark.read.parquet(base).count() == 10
+    assert "_uncompacted" not in os.listdir(base)
+    before = _listing(base)
+    assert jobs_in("compact-no-op", seen.compact) == 0
+    assert _listing(base) == before
+
+    seen.record_seen(spark.createDataFrame(urls[:3], "url string"))
+    assert spark.read.parquet(base).count() == 13
+    seen.compact()
+    assert sorted(r.url for r in spark.read.parquet(base).collect()) == sorted(
+        u for (u,) in urls
+    )
+
+
+def test_record_seen_after_crash_keeps_the_old_table(spark, tmp_path):
+    """An append after a compaction crashed in its rename window restores
+    the old table first instead of starting a fresh one beside it (which
+    the next compact's sweep would have deleted), and the restored table
+    keeps its uncompacted mark."""
+    base = str(tmp_path / "seen")
+    seen = UrlSeenSet(spark, base, expected_urls=1024)
+    seen.record_seen(
+        spark.createDataFrame([(f"http://s.com/p{i}",) for i in range(10)],
+                              "url string")
+    )
+    os.rename(base, base + "__trash-deadbeef")
+    seen.record_seen(
+        spark.createDataFrame([("http://s.com/new",)], "url string")
+    )
+    seen.compact()
+    assert spark.read.parquet(base).count() == 11
+    assert [e for e in os.listdir(str(tmp_path)) if "__" in e] == []
+
+
+def test_assembly_caches_nothing(spark, tmp_path):
+    """A crawl caches its nodes table only when the nodes are read:
+    crawl_fetch_plan (which never reads them) plus its write leaves the
+    session's cache as it found it, and a plain crawl adds the nodes entry
+    on the first read of ``forest.nodes``, not at assembly."""
+    from frontier.robots import crawl_fetch_plan
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    baseline = cache.numCachedEntries()
+    corpus = synth_crawl_corpus(spark, 2, leaves_per_host=2, pages_per_leaf=5)
+    seeds = [f"http://host{i}.example.com/" for i in range(2)]
+    plan = crawl_fetch_plan(spark, seeds, corpus, use_known_paths=False)
+    plan.write.parquet(str(tmp_path / "plan"))
+    assert cache.numCachedEntries() == baseline
+
+    forest = _crawl(spark, corpus, 2)
+    assembled = cache.numCachedEntries()
+    assert forest.nodes.count() == 2 * 4 + 2
+    assert cache.numCachedEntries() == assembled + 1
+    forest.unpersist()
+    assert cache.numCachedEntries() == baseline
 
 
 def test_forest_unpersist_frees_every_persisted_rdd(spark, tmp_path):
