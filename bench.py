@@ -4,7 +4,8 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 Headline metric (BASELINE.json): frontier throughput — URLs scheduled+parsed
 per second through the wave engine over a deterministic synthetic multi-host
 sitemap corpus sized by the scale factor. Per-query wall times for the
-training-data/relational operators at the same SF ride along in "queries".
+training-data/relational operators at the same SF ride along: "queries"
+holds each query's fastest run, "query_runs" its min, median and run count.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -310,6 +312,7 @@ def main() -> None:
     os.makedirs(workdir, exist_ok=True)
 
     timings: dict[str, float] = {}
+    query_runs: dict[str, dict] = {}
     probe_before = host_phase_probe()
     samples: list[dict] = []
     try:
@@ -353,6 +356,11 @@ def main() -> None:
             if min(runs) > 1.0 and max(runs) > 1.5 * min(runs):
                 runs.append(_time_one(name))
             timings[name] = round(min(runs), 3)
+            query_runs[name] = {
+                "min": timings[name],
+                "median": round(statistics.median(runs), 3),
+                "n": len(runs),
+            }
 
         # if no sample landed in a quiet phase, keep trying (bounded):
         # the headline is the driver's scoreboard and a degraded-phase-only
@@ -377,6 +385,7 @@ def main() -> None:
                 "value": round(urls / crawl_s, 1),
                 "unit": "urls/sec",
                 "queries": timings,
+                "query_runs": query_runs,
                 "sf": sf,
                 "cpus": CPUS,
                 "heap": driver_heap(),

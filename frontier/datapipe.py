@@ -7986,8 +7986,8 @@ _register(
 # robots.txt Crawl-delay): delay_ms = clamp(2 x p95 latency, 100..5000),
 # budget per 30 s politeness round = 30000 div delay. Composes the
 # nearest-rank quantile readout (fetch_latency_quantiles) into the
-# scheduler's per-host-budget contract (fetch_plan_budgeted /
-# stream_politeness_gate take exactly this shape). Same scale profile as
+# scheduler's per-host-budget contract (fetch_plan_budgeted takes exactly
+# this shape). Same scale profile as
 # the quantile op: ONE host exchange, in-partition sort, integer
 # arithmetic only.
 _ADAPTIVE_DELAY_SQL = """

@@ -14,10 +14,9 @@ across seeds and crawl rounds dominates cost. Design:
   appended per crawl round (``record_seen``);
 - the Bloom functions below serve the member path: ``make_member_filter``
   keeps the candidates whose key IS in a set too big to broadcast as a
-  join hash table (``decontam_bloom``, the streaming blocklist gate). It is
-  exactness-safe: a Bloom has no false negatives, and every positive is
-  confirmed by an exact semi-join. Membership and build are
-  fully VECTORIZED (pandas ``hash_array`` double hashing + numpy bit ops
+  join hash table (``decontam_bloom``). It is exactness-safe: a Bloom has
+  no false negatives, and every positive is confirmed by an exact
+  semi-join. Membership and build are fully VECTORIZED (pandas ``hash_array`` double hashing + numpy bit ops
   over whole Arrow batches — no per-row Python), in two physical
   strategies, auto-selected by bitmap size:
   * broadcast: one bitmap built distributed (per-partition partials,
@@ -284,6 +283,8 @@ def make_member_filter(
 #: appends; a live table without it holds nothing appended since its last
 #: compaction.
 _UNCOMPACTED = "_uncompacted"
+#: The seen table's one column.
+_SEEN_SCHEMA = "url string"
 
 
 class UrlSeenSet:
@@ -307,12 +308,15 @@ class UrlSeenSet:
         self.fpp = fpp
 
     def _seen_table(self) -> DataFrame | None:
-        if not os.path.exists(self.path.rstrip("/")):
-            self._recover()  # a crashed compaction may hold the live copy
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
-            return None  # no rounds recorded yet
+        """The table read with its declared schema, so reading it launches
+        no schema-inference job; None only while no table directory exists
+        (no rounds recorded yet). A directory without data files (a crash
+        between the mark and the first append) reads as an empty table, and
+        an unreadable data file fails the query that reads it."""
+        self._recover()  # a crashed compaction may hold the live copy
+        if not os.path.isdir(self.path.rstrip("/")):
+            return None
+        return self.spark.read.schema(_SEEN_SCHEMA).parquet(self.path)
 
     def filter_unseen(self, candidates: DataFrame, url_col: str = "url") -> DataFrame:
         """Rows of ``candidates`` whose URL is NOT in the seen set (one-shot

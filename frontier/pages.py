@@ -446,41 +446,39 @@ def extract_links(
     pages: DataFrame,
     html_col: str = "html",
     url_col: str = "url",
-    extra_cols: tuple[str, ...] = (),
     respect_nofollow: bool = False,
 ) -> DataFrame:
-    """``(url, [extra_cols...,] outlink)`` edge list from a pages corpus.
+    """``(url, outlink)`` edge list from a pages corpus.
 
     Arrow-batched ``mapInPandas`` applies :func:`html_outlinks` per page;
     the explode happens Spark-side on the already-deduped array, so the
-    kernel ships one row per page and the operator needs no shuffle.  At
-    10¹⁰ pages the edges flow straight into the Bloom seen-set anti-join —
-    the corpus rows themselves never move.  ``extra_cols`` carries small
-    metadata columns (e.g. ``fetch_ts``) through unchanged; works on
-    streaming DataFrames too (stateless).  ``respect_nofollow=True``
-    applies rel/meta nofollow link exclusion (see :func:`html_outlinks`).
+    kernel ships one row per page and the operator needs no shuffle.
+    ``respect_nofollow=True`` applies rel/meta nofollow link exclusion
+    (see :func:`html_outlinks`).
     """
     import pyspark.sql.types as T
 
     schema = T.StructType(
-        [pages.schema[url_col]]
-        + [pages.schema[c] for c in extra_cols]
-        + [T.StructField("outlinks", T.ArrayType(T.StringType()))]
+        [
+            pages.schema[url_col],
+            T.StructField("outlinks", T.ArrayType(T.StringType())),
+        ]
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            out = {url_col: batch[url_col]}
-            for c in extra_cols:
-                out[c] = batch[c]
-            out["outlinks"] = [
-                html_outlinks(h, u, respect_nofollow)
-                for h, u in zip(batch[html_col], batch[url_col])
-            ]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    url_col: batch[url_col],
+                    "outlinks": [
+                        html_outlinks(h, u, respect_nofollow)
+                        for h, u in zip(batch[html_col], batch[url_col])
+                    ],
+                }
+            )
 
     return pages.mapInPandas(kernel, schema).select(
-        url_col, *extra_cols, F.explode("outlinks").alias("outlink")
+        url_col, F.explode("outlinks").alias("outlink")
     )
 
 

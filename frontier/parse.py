@@ -76,20 +76,12 @@ class SitemapParseError(Exception):
 
 @dataclass
 class ParsedDoc:
-    """Outcome of parsing one payload.
-
-    ``n_pages`` is only populated in count-only mode (``pages`` stays
-    empty); in full mode use ``len(doc.pages)``."""
+    """Outcome of parsing one payload."""
 
     kind: str
     reason: str | None = None
     children: list[str] = field(default_factory=list)
     pages: list[dict[str, Any]] = field(default_factory=list)
-    n_pages: int = 0
-
-    @property
-    def page_count(self) -> int:
-        return self.n_pages if self.n_pages else len(self.pages)
 
 
 def _page_record(
@@ -140,7 +132,7 @@ def parse_robots(url: str, content: str) -> ParsedDoc:
     return ParsedDoc(kind=KIND_ROBOTS, children=list(seen))
 
 
-def parse_plain_text(url: str, content: str, count_only: bool = False) -> ParsedDoc:
+def parse_plain_text(url: str, content: str) -> ParsedDoc:
     """One valid URL per line → default-field pages, ordered first-wins dedup
     (fetch_parse.py:380-402)."""
     seen: dict[str, None] = {}
@@ -148,8 +140,6 @@ def parse_plain_text(url: str, content: str, count_only: bool = False) -> Parsed
         line = line.strip()
         if line and is_http_url(line):
             seen.setdefault(line)
-    if count_only:
-        return ParsedDoc(kind=KIND_PLAIN_TEXT, n_pages=len(seen))
     return ParsedDoc(
         kind=KIND_PLAIN_TEXT, pages=[_page_record(u) for u in seen]
     )
@@ -248,15 +238,7 @@ class _UrlsetCollector:
         elif name in self._IMAGE_FIELDS:
             self._cur_image[self._IMAGE_FIELDS[name]] = text
 
-    def result(self, url: str, count_only: bool = False) -> ParsedDoc:
-        if count_only:
-            # a finished entry is dropped only for an empty unescaped <loc>
-            # (_finish_xml_page's sole None path); everything else merely
-            # normalizes fields — so the count needs no record building
-            n = sum(
-                1 for raw in self._entries if html_unescape_strip(raw.get("loc"))
-            )
-            return ParsedDoc(kind=self.kind, n_pages=n)
+    def result(self, url: str) -> ParsedDoc:
         pages = []
         for raw in self._entries:
             page = _finish_xml_page(raw)
@@ -361,7 +343,7 @@ class _SitemapIndexCollector:
             if is_http_url(child) and child not in self._children:
                 self._children.append(child)
 
-    def result(self, url: str, count_only: bool = False) -> ParsedDoc:
+    def result(self, url: str) -> ParsedDoc:
         return ParsedDoc(kind=self.kind, children=list(self._children))
 
 
@@ -385,20 +367,7 @@ class _FeedCollectorBase:
             self._entries.append(self._cur)
         self._cur = None
 
-    def result(self, url: str, count_only: bool = False) -> ParsedDoc:
-        if count_only:
-            # an entry survives iff link and (title or description) unescape
-            # to non-empty — the date parse is the only other work skipped
-            n = sum(
-                1
-                for raw in self._entries
-                if html_unescape_strip(raw.get("link"))
-                and (
-                    html_unescape_strip(raw.get("title"))
-                    or html_unescape_strip(raw.get("description"))
-                )
-            )
-            return ParsedDoc(kind=self.kind, n_pages=n)
+    def result(self, url: str) -> ParsedDoc:
         pages = []
         for raw in self._entries:
             link = html_unescape_strip(raw.get("link"))
@@ -614,7 +583,7 @@ class _ExpatDriver:
         parser.Parse(content, True)
 
 
-def parse_xml(url: str, content: str, count_only: bool = False) -> ParsedDoc:
+def parse_xml(url: str, content: str) -> ParsedDoc:
     """Dispatch + parse an XML payload; tolerate truncation by keeping whatever
     was extracted before the failure (fetch_parse.py:444-478)."""
     driver = _ExpatDriver(url)
@@ -627,18 +596,14 @@ def parse_xml(url: str, content: str, count_only: bool = False) -> ParsedDoc:
         return ParsedDoc(
             kind=KIND_INVALID, reason=f"No parsers support sitemap from {url}"
         )
-    return driver.collector.result(url, count_only)
+    return driver.collector.result(url)
 
 
-def parse_sitemap_text(url: str, content: str, count_only: bool = False) -> ParsedDoc:
-    """Top-level single-document entry: sniff then parse.
-
-    ``count_only`` skips page-record normalization and returns only
-    ``n_pages`` — the wave loop uses this (children + status + page count
-    are all it needs; full records are extracted by the lazy page pass)."""
+def parse_sitemap_text(url: str, content: str) -> ParsedDoc:
+    """Top-level single-document entry: sniff then parse."""
     fmt = sniff_format(url, content)
     if fmt == "xml":
-        return parse_xml(url, content, count_only)
+        return parse_xml(url, content)
     if fmt == "robots":
         return parse_robots(url, content)
-    return parse_plain_text(url, content, count_only)
+    return parse_plain_text(url, content)

@@ -272,7 +272,7 @@ def process_pending_row(row: dict[str, Any], out: _Out, pages: "_PageSink") -> N
     # re-parsed
     doc = K.parse_sitemap_text(final_url, text)
 
-    out.node(base, final_url, doc.kind, doc.reason, doc.page_count)
+    out.node(base, final_url, doc.kind, doc.reason, len(doc.pages))
     if doc.pages:
         pages.add_doc(base["seed"], final_url, base["path_key"], doc)
 

@@ -67,7 +67,7 @@ def _kernel(q):
     n = 0
     while time.perf_counter() - t0 < SECONDS:
         text = decode_sitemap_body(url, "application/xml", body, K.MAX_SITEMAP_BYTES)
-        doc = K.parse_sitemap_text(url, text, count_only=False)
+        doc = K.parse_sitemap_text(url, text)
         sink.add_doc("http://host0.example.com/", url, "0.0", doc)
         n += 250
     sink.close()

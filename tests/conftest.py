@@ -40,3 +40,16 @@ def jobs_in(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name every skipped test or module with its reason, also under -q,
+    so a module that stops running shows up in the summary."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    if not skipped:
+        return
+    terminalreporter.section("skipped", sep="-")
+    for rep in skipped:
+        path, lineno, reason = rep.longrepr  # skip reports: (path, line, reason)
+        reason = reason.removeprefix("Skipped: ")
+        terminalreporter.line(f"SKIPPED {os.path.relpath(path)}:{lineno}: {reason}")

@@ -134,14 +134,6 @@ def _ours_parse(content: str):
 def assert_same(content: str) -> None:
     ref_kind, ref_children, ref_pages = _ref_parse(content)
     our_kind, our_children, our_pages = _ours_parse(content)
-    # count-only mode (the wave loop's fast path) must agree with the full
-    # parse on every document — checked on every corpus + fuzz input
-    counted = K.parse_sitemap_text("http://usp-local-dummy.local/", content, True)
-    assert counted.page_count == len(our_pages), (
-        f"count_only {counted.page_count} != full {len(our_pages)}"
-    )
-    assert counted.kind == our_kind
-    assert counted.children == our_children
     if ref_kind == K.KIND_INVALID:
         assert our_kind == K.KIND_INVALID, f"ref invalid, ours {our_kind}"
         return

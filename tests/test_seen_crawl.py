@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from frontier.datapipe import REGISTRY
@@ -280,6 +281,54 @@ def test_record_seen_after_crash_keeps_the_old_table(spark, tmp_path):
     seen.compact()
     assert spark.read.parquet(base).count() == 11
     assert [e for e in os.listdir(str(tmp_path)) if "__" in e] == []
+
+
+def _candidates(spark, *urls):
+    return spark.createDataFrame([(u,) for u in urls], "url string")
+
+
+def test_seen_table_read_launches_no_job(spark, tmp_path, jobs_in):
+    """The seen table is read with its declared schema: preparing the
+    filter over an existing table launches no Spark job."""
+    seen = UrlSeenSet(spark, str(tmp_path / "seen"), expected_urls=1024)
+    seen.record_seen(_candidates(spark, "http://a/", "http://b/"))
+    seen.compact()
+    assert jobs_in("seen-prepare", seen.prepare_filter) == 0
+    unseen = seen.prepare_filter()(_candidates(spark, "http://a/", "http://c/"))
+    assert [r.url for r in unseen.collect()] == ["http://c/"]
+
+
+def test_unreadable_seen_table_fails_the_filter(spark, tmp_path):
+    """A table whose data files cannot be read is an error, not "no rounds
+    yet": filtering through it raises instead of passing seen URLs."""
+    base = str(tmp_path / "seen")
+    seen = UrlSeenSet(spark, base, expected_urls=1024)
+    seen.record_seen(_candidates(spark, "http://a/", "http://b/"))
+    seen.compact()
+    parts = [e for e in os.listdir(base) if e.startswith("part-")]
+    assert parts
+    for part in parts:
+        with open(os.path.join(base, part), "wb") as f:
+            f.write(b"not a parquet file")
+    candidates = _candidates(spark, "http://a/", "http://c/")
+    with pytest.raises(Exception):
+        seen.prepare_filter()(candidates).collect()
+
+
+def test_marker_only_table_filters_as_identity(spark, tmp_path):
+    """A crash between record_seen's mark and its append leaves a table
+    directory with no data file: it filters nothing out, and compacting it
+    leaves a readable empty table without the mark."""
+    base = str(tmp_path / "seen")
+    os.makedirs(base)
+    open(os.path.join(base, "_uncompacted"), "w").close()
+    seen = UrlSeenSet(spark, base, expected_urls=1024)
+    unseen = seen.filter_unseen(_candidates(spark, "http://a/", "http://c/"))
+    assert sorted(r.url for r in unseen.collect()) == ["http://a/", "http://c/"]
+    seen.compact()
+    assert "_uncompacted" not in os.listdir(base)
+    table = spark.read.parquet(base)
+    assert table.columns == ["url"] and table.count() == 0
 
 
 def test_assembly_caches_nothing(spark, tmp_path):
