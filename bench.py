@@ -5,7 +5,7 @@ Headline metric (BASELINE.json): frontier throughput — URLs scheduled+parsed
 per second through the wave engine over a deterministic synthetic multi-host
 sitemap corpus sized by the scale factor. Per-query wall times for the
 training-data/relational operators at the same SF ride along: "queries"
-holds each query's fastest run, "query_runs" its min, median and run count.
+holds each query's fastest run, "query_runs" the spread() of its runs.
 """
 
 from __future__ import annotations
@@ -22,6 +22,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: local[N] width: SPARK_GRAFT_CPUS, else the cores this process may run on
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+#: N of the N→4N scaling benches: a quarter of CPUS, so a 4-core box
+#: compares local[1] with local[4]
+N_LOW = max(1, CPUS // 4)
 
 
 def driver_heap() -> str:
@@ -37,13 +40,8 @@ def driver_heap() -> str:
 # 90 s SYSTEM time for 512 MB), which is 100x slower than any real
 # cluster-node scratch volume — benching against it measures the hypervisor,
 # not the engine. RAM-backed scratch is the honest stand-in for node-local
-# NVMe.
+# NVMe. build_spark points the session and tempfile at it.
 SCRATCH = "/dev/shm/frontier_bench" if os.path.isdir("/dev/shm") else None
-if SCRATCH:
-    import tempfile
-
-    os.makedirs(SCRATCH, exist_ok=True)
-    tempfile.tempdir = SCRATCH  # page-sink temp dirs (waves.py mkdtemp)
 
 BENCH_QUERIES = [
     "pricing_summary",
@@ -201,44 +199,55 @@ def build_spark(cpus: int):
         .config("spark.ui.enabled", "false")
     )
     if SCRATCH:
+        import tempfile
+
+        os.makedirs(SCRATCH, exist_ok=True)
+        tempfile.tempdir = SCRATCH  # page-sink temp dirs (waves.py mkdtemp)
         builder = builder.config(
             "spark.local.dir", os.path.join(SCRATCH, "spark-local")
         )
     return builder.getOrCreate()
 
 
-def warmup_crawl(spark, corpus, n_hosts: int) -> None:
-    """Untimed warm-up: full wave+parse path end to end (JVM C2 compilation
-    of the Arrow columnar accessors AND the full Python worker pool — a
-    partial warm-up leaves most workers paying import costs in the timed
-    run). ``corpus`` must already be prepared (prepare_fetches)."""
+def crawl_once(spark, corpus, seeds, **kw) -> tuple[int, int]:
+    """The bench's one crawl sample: crawl ``seeds`` over a prepared
+    ``corpus`` (prepare_fetches), count pages and nodes, and release what
+    the crawl persisted (node cache, page-sink files). ``kw`` passes
+    ``seen_set``/``record_seen`` through. URLs processed = pages + nodes
+    minus the synthetic roots (one per seed), the unit BASELINE.md's
+    throughput metric counts."""
     from frontier.waves import sitemap_tree_for_homepages
 
-    seeds = [f"http://host{i}.example.com/" for i in range(n_hosts)]
     forest = sitemap_tree_for_homepages(
         spark, seeds, corpus, use_known_paths=False, store_urls_unique=True,
-        fetches_prepared=True,
+        fetches_prepared=True, **kw,
     )
-    forest.pages.count()
-    forest.unpersist()  # release caches + the warm-up's temp page files
+    counts = forest.pages.count(), forest.nodes.count()
+    forest.unpersist()
+    return counts
+
+
+def host_seeds(prefix: str, n_hosts: int) -> list[str]:
+    """Homepage seeds of the synthetic corpora (synth_crawl_corpus: "host",
+    synth_deep_corpus: "deep")."""
+    return [f"http://{prefix}{i}.example.com/" for i in range(n_hosts)]
 
 
 def prepare_crawl(spark, sf: float, workdir: str):
-    """Materialize the corpus + warm up (untimed). Returns
-    (corpus, seeds, n_hosts) ready for timed samples."""
+    """Materialize the corpus + warm up (untimed). Returns (corpus, seeds)
+    ready for timed samples."""
     from frontier.synth import synth_crawl_corpus
     from frontier.waves import cluster_fetch_store, prepare_fetches
 
     n_hosts = max(8, int(20000 * sf))
-    leaves, pages_per_leaf = 4, 250
     corpus_path = os.path.join(workdir, "corpus")
     # suffix-clustered store layout (one-time, offline in a real deployment):
     # waves prune to their own buckets, so the robots/index waves stop
     # paying the full store's body-column decompress
     cluster_fetch_store(
         synth_crawl_corpus(
-            spark, n_hosts, leaves_per_host=leaves,
-            pages_per_leaf=pages_per_leaf, partitions=4 * CPUS,
+            spark, n_hosts, leaves_per_host=4, pages_per_leaf=250,
+            partitions=4 * CPUS,
         ),
         corpus_path,
     )
@@ -250,57 +259,80 @@ def prepare_crawl(spark, sf: float, workdir: str):
     corpus = prepare_fetches(
         spark.read.parquet(corpus_path), resolve_redirects=False
     )
-    seeds = [f"http://host{i}.example.com/" for i in range(n_hosts)]
+    seeds = host_seeds("host", n_hosts)
+    # untimed warm-up: the full wave+parse path end to end (JVM C2
+    # compilation of the Arrow columnar accessors AND the full Python worker
+    # pool — a partial warm-up leaves most workers paying import costs in
+    # the timed run)
+    crawl_once(spark, corpus, seeds)
+    return corpus, seeds
 
-    warmup_crawl(spark, corpus, n_hosts)
-    return corpus, seeds, n_hosts
+
+def spread(samples: list[float]) -> dict:
+    """Median, quartiles, min, max and count of timing samples (seconds)."""
+    if len(samples) > 1:
+        q1, med, q3 = statistics.quantiles(samples, n=4, method="inclusive")
+    else:
+        q1 = med = q3 = samples[0]
+    return {
+        "median_s": round(med, 3),
+        "q1_s": round(q1, 3),
+        "q3_s": round(q3, 3),
+        "min_s": round(min(samples), 3),
+        "max_s": round(max(samples), 3),
+        "n": len(samples),
+        "samples_s": [round(s, 3) for s in samples],
+    }
 
 
-# A sample counts as quiet when memcpy bandwidth is within ~2x of the
-# quiet-phase reference (46.6/s, BENCH/ceilings.json); below that the box
-# is in a documented degraded phase and the sample measures the neighbors.
+# A probe is quiet when memcpy bandwidth is within ~2x of the quiet-phase
+# reference (46.6/s, BENCH/ceilings.json); below that the box is in a
+# documented degraded phase and a sample measures the neighbors.
 QUIET_MEMCPY_MIN = 22.0
-GATE_WAIT_S = 20.0
-GATE_ATTEMPTS = 3
+GATE_STEP_S = 20.0
 
 
-def timed_crawl_sample(spark, corpus, seeds, n_hosts: int) -> dict:
-    """ONE probe-gated timed crawl: wait (bounded) for a quiet host
-    phase, flush writeback, time the crawl, record the probe evidence.
-    Returns {sec, urls, pages, probe, quiet, waited_s}."""
+def gated_sample(action, max_wait_s: float) -> dict:
+    """ONE probe-gated timed run of ``action()``: probe the host every
+    GATE_STEP_S until it is quiet or ``max_wait_s`` has passed, flush
+    writeback, time the action, probe again. The sample is quiet only if
+    the probes before AND after it clear QUIET_MEMCPY_MIN — a phase shift
+    in the middle of the run poisons it. Returns {sec, out, quiet,
+    waited_s, probe, probe_after}; ``out`` is what ``action`` returned."""
+
+    def quiet(probe: dict) -> bool:
+        return probe["memcpy64mb_per_sec"] >= QUIET_MEMCPY_MIN
+
     waited = 0.0
-    probe = None
-    for _ in range(GATE_ATTEMPTS):
+    probe = host_phase_probe(1.0)
+    while not quiet(probe) and waited < max_wait_s:
+        time.sleep(GATE_STEP_S)
+        waited += GATE_STEP_S
         probe = host_phase_probe(1.0)
-        if probe["memcpy64mb_per_sec"] >= QUIET_MEMCPY_MIN:
-            break
-        time.sleep(GATE_WAIT_S)
-        waited += GATE_WAIT_S
-    from frontier.waves import sitemap_tree_for_homepages
-
     # flush dirty pages (page-sink parquet + snapshots): background
     # writeback otherwise lands mid-timed-run and skews waves by
     # multiples (measured 5.7 s vs 30 s for the identical wave-0 job)
     os.sync()
     start = time.perf_counter()
-    forest = sitemap_tree_for_homepages(
-        spark, seeds, corpus, use_known_paths=False, store_urls_unique=True,
-        fetches_prepared=True,
-    )
-    n_pages = forest.pages.count()
-    n_nodes = forest.nodes.count()
+    out = action()
     sec = time.perf_counter() - start
-    forest.unpersist()
-    # URLs processed = sitemap fetches (nodes minus synthetic roots) + page
-    # records parsed — the unit BASELINE.md's throughput metric counts
+    after = host_phase_probe(1.0)
     return {
         "sec": round(sec, 3),
-        "urls": n_pages + (n_nodes - n_hosts),
-        "pages": n_pages,
-        "probe": probe,
-        "quiet": probe["memcpy64mb_per_sec"] >= QUIET_MEMCPY_MIN,
+        "out": out,
+        "quiet": quiet(probe) and quiet(after),
         "waited_s": waited,
+        "probe": probe,
+        "probe_after": after,
     }
+
+
+def timed_crawl_sample(spark, corpus, seeds) -> dict:
+    """One gated crawl sample (at most 60 s of waiting for a quiet phase):
+    gated_sample's record with the crawl's ``urls`` and ``pages``."""
+    sample = gated_sample(lambda: crawl_once(spark, corpus, seeds), 60.0)
+    pages, nodes = sample.pop("out")
+    return {**sample, "urls": pages + nodes - len(seeds), "pages": pages}
 
 
 def main() -> None:
@@ -316,7 +348,7 @@ def main() -> None:
     probe_before = host_phase_probe()
     samples: list[dict] = []
     try:
-        corpus, seeds, n_hosts = prepare_crawl(spark, sf, workdir)
+        corpus, seeds = prepare_crawl(spark, sf, workdir)
 
         import __spark_entry__ as entrymod
 
@@ -339,7 +371,7 @@ def main() -> None:
         # code). Each sample is additionally probe-gated: if the memcpy
         # probe says the box is in a degraded phase, wait (bounded) for
         # it to pass, and record the probe alongside the timing.
-        samples.append(timed_crawl_sample(spark, corpus, seeds, n_hosts))
+        samples.append(timed_crawl_sample(spark, corpus, seeds))
 
         # per-query min-of-2, the two runs minutes apart (same rationale);
         # a final retry pass re-times non-trivial queries whose two
@@ -347,27 +379,23 @@ def main() -> None:
         runs_by: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
         for name in BENCH_QUERIES:
             runs_by[name].append(_time_one(name))
-        samples.append(timed_crawl_sample(spark, corpus, seeds, n_hosts))
+        samples.append(timed_crawl_sample(spark, corpus, seeds))
         for name in BENCH_QUERIES:
             runs_by[name].append(_time_one(name))
-        samples.append(timed_crawl_sample(spark, corpus, seeds, n_hosts))
+        samples.append(timed_crawl_sample(spark, corpus, seeds))
         for name in BENCH_QUERIES:
             runs = runs_by[name]
             if min(runs) > 1.0 and max(runs) > 1.5 * min(runs):
                 runs.append(_time_one(name))
             timings[name] = round(min(runs), 3)
-            query_runs[name] = {
-                "min": timings[name],
-                "median": round(statistics.median(runs), 3),
-                "n": len(runs),
-            }
+            query_runs[name] = spread(runs)
 
         # if no sample landed in a quiet phase, keep trying (bounded):
         # the headline is the driver's scoreboard and a degraded-phase-only
         # reading misreports the engine by 2-6x.
         extra = 0
         while not any(s["quiet"] for s in samples) and extra < 2:
-            samples.append(timed_crawl_sample(spark, corpus, seeds, n_hosts))
+            samples.append(timed_crawl_sample(spark, corpus, seeds))
             extra += 1
 
         quiet = [s for s in samples if s["quiet"]] or samples
@@ -391,16 +419,7 @@ def main() -> None:
                 "heap": driver_heap(),
                 "crawl_urls": urls,
                 "crawl_runs_sec": [s["sec"] for s in samples],
-                "crawl_samples": [
-                    {
-                        "sec": s["sec"],
-                        "quiet": s["quiet"],
-                        "waited_s": s["waited_s"],
-                        "memcpy64mb_per_sec": s["probe"]["memcpy64mb_per_sec"],
-                        "alu_per_sec": s["probe"]["alu_per_sec"],
-                    }
-                    for s in samples
-                ],
+                "crawl_samples": samples,
                 "host_phase": {
                     "before": probe_before,
                     "after": host_phase_probe(),

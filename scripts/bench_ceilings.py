@@ -1,8 +1,9 @@
-"""Hardware scaling ceilings for the 8->32-core efficiency figure.
+"""Hardware scaling ceilings for the N->4N-core efficiency figure.
 
     python scripts/bench_ceilings.py
 
-Measures, at 8 and 32 processes on this host:
+Measures, at the scaling bench's two levels (bench.N_LOW and 4x as many
+processes) on this host:
   alu     pure-interpreter integer loop (no memory traffic)
   memcpy  64 MB numpy buffer copies (pure memory bandwidth)
   kernel  the actual parse+sink kernel over one leaf body (no Spark)
@@ -26,7 +27,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import N_LOW
+
 SECONDS = 10
+LEVELS = (N_LOW, 4 * N_LOW)
 
 
 def _alu(q):
@@ -90,14 +94,13 @@ def run(fn, k: int) -> float:
 
 
 def main() -> None:
-    out = {}
+    out = {"procs": LEVELS}
     for name, fn in (("alu", _alu), ("memcpy", _memcpy), ("kernel", _kernel)):
-        lo = run(fn, 8)
-        hi = run(fn, 32)
+        lo, hi = (run(fn, k) for k in LEVELS)
         out[name] = {
-            "per_sec_8": round(lo, 1),
-            "per_sec_32": round(hi, 1),
-            "eff_8_to_32": round((hi / lo) / 4, 3),
+            "per_sec_low": round(lo, 1),
+            "per_sec_high": round(hi, 1),
+            "scaling_efficiency": round((hi / lo) / 4, 3),
         }
         print(name, out[name], file=sys.stderr)
     print(json.dumps(out))

@@ -26,17 +26,22 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import CPUS, build_spark, driver_heap
+from bench import (
+    CPUS,
+    SCRATCH,
+    build_spark,
+    crawl_once,
+    driver_heap,
+    host_seeds,
+)
 
 
 def main() -> None:
     n_hosts = int(sys.argv[1]) if len(sys.argv) > 1 else 8000
     leaves, pages_per_leaf = 4, 250
 
-    import bench as _bench
-
     workdir = os.path.join(
-        _bench.SCRATCH or "/tmp", f"frontier_recrawl_{os.getpid()}"
+        SCRATCH or "/tmp", f"frontier_recrawl_{os.getpid()}"
     )
     corpus_path = os.path.join(workdir, "corpus")
     seen_path = os.path.join(workdir, "seen")
@@ -57,11 +62,7 @@ def main() -> None:
     try:
         from frontier.dedup import UrlSeenSet
         from frontier.synth import synth_crawl_corpus
-        from frontier.waves import (
-            cluster_fetch_store,
-            prepare_fetches,
-            sitemap_tree_for_homepages,
-        )
+        from frontier.waves import cluster_fetch_store, prepare_fetches
 
         cluster_fetch_store(
             synth_crawl_corpus(
@@ -73,33 +74,26 @@ def main() -> None:
         corpus = prepare_fetches(
             spark.read.parquet(corpus_path), resolve_redirects=False
         )
-        seeds = [f"http://host{i}.example.com/" for i in range(n_hosts)]
+        seeds = host_seeds("host", n_hosts)
         # seen set sized for the sitemap URL population (robots + index +
         # leaves per host), the only URLs the wave loop ever fetches
         seen = UrlSeenSet(
             spark, seen_path, expected_urls=n_hosts * (2 + leaves), fpp=0.01
         )
 
-        def crawl(**kw):
-            forest = sitemap_tree_for_homepages(
-                spark, seeds, corpus, use_known_paths=False,
-                store_urls_unique=True, fetches_prepared=True, **kw,
+        def crawl():
+            return crawl_once(
+                spark, corpus, seeds, seen_set=seen, record_seen=True
             )
-            counts = forest.pages.count(), forest.nodes.count()
-            forest.unpersist()
-            return counts
 
-        crawl()  # untimed warm-up (JIT + worker pool), no seen involvement
+        # untimed warm-up (JIT + worker pool), no seen involvement
+        crawl_once(spark, corpus, seeds)
         os.sync()
 
-        cold_s, cold_jobs, (n_pages1, n_nodes1) = timed(
-            "cold", lambda: crawl(seen_set=seen, record_seen=True)
-        )
+        cold_s, cold_jobs, (n_pages1, n_nodes1) = timed("cold", crawl)
         cold_compact_s, cold_compact_jobs, _ = timed("cold-compact", seen.compact)
 
-        warm_s, warm_jobs, (n_pages2, n_nodes2) = timed(
-            "recrawl", lambda: crawl(seen_set=seen, record_seen=True)
-        )
+        warm_s, warm_jobs, (n_pages2, n_nodes2) = timed("recrawl", crawl)
         warm_compact_s, warm_compact_jobs, _ = timed(
             "recrawl-compact", seen.compact
         )

@@ -28,26 +28,13 @@ import argparse
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from bench import CPUS, SCRATCH, build_spark, driver_heap  # noqa: E402
-
-
-def _spread(samples: list[float]) -> dict:
-    q1, med, q3 = statistics.quantiles(samples, n=4, method="inclusive")
-    return {
-        "median_s": round(med, 3),
-        "q1_s": round(q1, 3),
-        "q3_s": round(q3, 3),
-        "min_s": round(min(samples), 3),
-        "max_s": round(max(samples), 3),
-        "samples_s": [round(s, 3) for s in samples],
-    }
+from bench import CPUS, SCRATCH, build_spark, driver_heap, spread  # noqa: E402
 
 
 def _timed(fn) -> tuple[float, int]:
@@ -107,7 +94,7 @@ def measure(spark, workdir: str, n_seen: int, reps: int) -> dict:
         out[name] = {
             "candidates": cand.count(),
             "unseen": unseen,
-            "anti_join": _spread(times),
+            "anti_join": spread(times),
         }
     shutil.rmtree(path, ignore_errors=True)
     return out

@@ -12,7 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import build_spark
+from bench import CPUS, build_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -113,7 +113,7 @@ AUDITED = {
 def main() -> None:
     import __spark_entry__ as e
 
-    spark = build_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = build_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
     out = [

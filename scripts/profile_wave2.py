@@ -9,7 +9,8 @@ Layers, each timed after one warm-up pass:
   full      + real kernel, page records to a tmpfs sink       (everything)
 
 The gap between consecutive layers attributes wall time; comparing runs at
-local[8] vs local[32] shows which layer stops scaling.
+N and 4N cpus shows which layer stops scaling. ``cpus`` defaults to
+``bench.CPUS`` (the box's cores).
 """
 
 from __future__ import annotations
@@ -22,9 +23,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow as pa
 
-from bench import build_spark
+from bench import CPUS as BOX_CPUS, build_spark
 
-CPUS = int(sys.argv[1]) if len(sys.argv) > 1 else 32
+CPUS = int(sys.argv[1]) if len(sys.argv) > 1 else BOX_CPUS
 N_HOSTS = int(sys.argv[2]) if len(sys.argv) > 2 else 2000
 
 

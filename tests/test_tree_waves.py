@@ -294,7 +294,7 @@ def test_deep_chain_crawls_to_recursion_ceiling(spark):
     chain is the first shape the recursion ceiling bites — its deepest
     leaf is blocked with the reference's exact message
     (fetch_parse.py:69), while chain_depth=10 crawls fully through 12
-    waves. Pins the corpus the depth bench (scripts/bench_depth.py)
+    waves. Pins the corpus the depth bench (scripts/bench_scaling.py deep)
     relies on."""
     from frontier.synth import synth_deep_corpus
     from frontier.waves import LAST_WAVE_TIMINGS, sitemap_tree_for_homepages
